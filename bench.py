@@ -279,8 +279,9 @@ def main() -> None:
 
     if do_scaling:
         n_small = int(os.environ.get("SPARK_GRAFT_SCALING_N", "1"))
-        # 7 ABBA pairs (round 4 used 5): with efficiency now the MEDIAN OF
-        # PER-PAIR RATIOS, 7 pairs tolerate 3 transient-contaminated pairs.
+        # 7 ABBA pairs (round 4 used 5): efficiency is best-of-K, the min
+        # leg time per side, so 6 of the 7 legs per side may be
+        # transient-contaminated before the headline moves.
         # Progressive JSON printing keeps an external timeout from losing
         # the evidence gathered so far.
         n_legs = int(os.environ.get("SPARK_GRAFT_SCALING_LEGS", "7"))

@@ -25,16 +25,19 @@ from llm_review_aggregation_spark.operators import tree as tree_ops
 _GROUP_RE = re.compile(r"^[a-z]+://[^/]+/([^/]+)/")
 
 
+def _group_id(url):
+    # the engine's regexp_extract: a null url gives a null group_id, a url
+    # that does not match gives ""
+    if url is None:
+        return None
+    m = _GROUP_RE.match(url)
+    return m.group(1) if m else ""
+
+
 def docs_from_pages(pages_pdf: pd.DataFrame) -> list[dict]:
     out = []
     for url, html in zip(pages_pdf["url"], pages_pdf["html"]):
-        out.append(
-            {
-                "url": url,
-                "group_id": _GROUP_RE.match(url).group(1),
-                "text": tp.clean_text(html),
-            }
-        )
+        out.append({"url": url, "group_id": _group_id(url), "text": tp.clean_text(html)})
     return out
 
 

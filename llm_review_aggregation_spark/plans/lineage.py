@@ -3,8 +3,15 @@
 Generalizes the reference's run metadata (`aspect_extractions.status` /
 `retry_count`, db/manager.py:172-190) and its model-file existence checks
 (run.sh:47-53): every stage writes its output table plus lineage rows
-(stage, partition_id, output_rows, checkpoint_ts, status); a re-run skips
-stages whose lineage is complete — resume-from-checkpoint mid-pipeline.
+(stage, partition_id, output_rows, checkpoint_ts, status, duration_sec); a
+re-run skips stages whose lineage is complete — resume-from-checkpoint
+mid-pipeline.
+
+With parquet, the bookkeeping costs no Spark job, like the reference's one
+status-row write: the lineage rows come from the parquet footers of the
+files the stage's write produced, are written as one small parquet file by
+the driver, and completion is read from that file on the driver. A
+checkpointed stage then costs one Spark job, its write.
 
 All table writes and reads go through one chokepoint pair (`_write_table` /
 `_read_table`) selected by `table_format`:
@@ -22,16 +29,27 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import warnings
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LINEAGE_SCHEMA = (
     "stage string, partition_id int, output_rows long, checkpoint_ts double, "
     "status string, duration_sec double"
 )
+# LINEAGE_SCHEMA for the driver-side writer; Spark reads the files back with
+# LINEAGE_SCHEMA, so the two must name the same columns and types
+_LINEAGE_ARROW = pa.schema([
+    ("stage", pa.string()), ("partition_id", pa.int32()), ("output_rows", pa.int64()),
+    ("checkpoint_ts", pa.float64()), ("status", pa.string()), ("duration_sec", pa.float64()),
+])
+_PART_RE = re.compile(r"part-(\d+)")
 
 
 class StageStore:
@@ -107,7 +125,11 @@ class StageStore:
             return
         df.write.mode("overwrite").parquet(path)
 
-    def _read_table(self, stage: str, kind: str = "table") -> DataFrame:
+    def _read_table(
+        self, stage: str, kind: str = "table", schema: StructType | None = None
+    ) -> DataFrame:
+        """`schema`, when the caller knows it (it just wrote the table),
+        spares the plain-parquet read its schema-inference job."""
         if self.table_format == "iceberg":
             return self.spark.table(self._table_ident(f"{kind}_{stage}"))
         path = self._table_path(stage) if kind == "table" else self._lineage_path(stage)
@@ -125,7 +147,8 @@ class StageStore:
                     f"LOCATION '{path}'"
                 )
             return self.spark.table(name)
-        return self.spark.read.parquet(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     # -- paths ---------------------------------------------------------------
     def _table_path(self, stage: str) -> str:
@@ -139,53 +162,78 @@ class StageStore:
 
     # -- status ---------------------------------------------------------------
     def is_complete(self, stage: str) -> bool:
-        # short-circuit the common first-run miss: spark.read.parquet on a
-        # missing dir logs a WARN + stack trace before the except fires,
-        # which buries real warnings in operator logs
-        if self.table_format == "parquet" and not os.path.isdir(self._lineage_path(stage)):
-            return False
+        if self.table_format == "iceberg":
+            try:
+                rows = self._read_table(stage, kind="lineage").filter(F.col("status") == "complete").count()
+                return rows > 0
+            except Exception:
+                return False
+        # driver-side read of the lineage file(s): also accepts lineage
+        # dirs Spark wrote (several part files beside _SUCCESS / .crc)
         try:
-            rows = self._read_table(stage, kind="lineage").filter(F.col("status") == "complete").count()
-            return rows > 0
-        except Exception:
+            status = pq.read_table(self._lineage_path(stage), columns=["status"]).column("status")
+        except (OSError, pa.ArrowException):  # no lineage dir, or no lineage file in it yet
             return False
+        return "complete" in status.to_pylist()
 
-    def _write_lineage(self, stage: str, df_on_disk: DataFrame, duration_sec: float) -> None:
-        # Partition identity = the writer task's output file (part-NNNNN),
-        # via the hidden `_metadata` column — NOT spark_partition_id() of the
-        # read-back scan, which bin-packs small files and would report the
-        # reader's coalesced layout instead of the layout the stage produced.
-        if self.table_format == "parquet":
-            pid = F.regexp_extract(F.col("_metadata.file_name"), r"part-(\d+)", 1).cast("int")
+    @staticmethod
+    def _footer_counts(path: str) -> list[tuple[int, int]]:
+        """(partition_id, output_rows) of a parquet table directory, from
+        its data files' footers. Partition identity is the writer task's
+        part-NNNNN, not the layout a read-back scan would bin-pack the files
+        into; a task that wrote several files (buckets, maxRecordsPerFile)
+        sums over them, and zero-row files are dropped, as a row-level
+        rollup would drop them."""
+        rows: dict[int, int] = {}
+        for name in os.listdir(path):
+            if name.startswith(("_", ".")):  # _SUCCESS, .crc: not data, as Spark lists them
+                continue
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            if n:
+                pid = int(_PART_RE.search(name).group(1))
+                rows[pid] = rows.get(pid, 0) + n
+        return sorted(rows.items())
+
+    def _write_lineage(self, stage: str, duration_sec: float) -> None:
+        if self.table_format == "iceberg":
+            counts = self._read_table(stage).groupBy(F.spark_partition_id()).count().collect()
         else:
-            pid = F.spark_partition_id()
-        counts = (
-            df_on_disk.groupBy(pid.alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("output_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("checkpoint_ts", F.lit(time.time()))
-            .withColumn("status", F.lit("complete"))
-            .withColumn("duration_sec", F.lit(float(duration_sec)))
-            .select(
-                "stage", "partition_id", "output_rows", "checkpoint_ts", "status", "duration_sec"
-            )
-        )
-        if counts.rdd.isEmpty():
-            counts = self.spark.createDataFrame(
-                [(stage, -1, 0, time.time(), "complete", float(duration_sec))], LINEAGE_SCHEMA
-            )
-        self._write_table(counts, stage, kind="lineage")
+            counts = self._footer_counts(self._table_path(stage))
+        ts = time.time()
+        # an empty stage still records one row, so it resumes as complete
+        rows = [(stage, pid, n, ts, "complete", duration_sec) for pid, n in counts] or [
+            (stage, -1, 0, ts, "complete", duration_sec)
+        ]
+        if self.table_format == "iceberg":
+            self._write_table(self.spark.createDataFrame(rows, LINEAGE_SCHEMA), stage, kind="lineage")
+            return
+        # replace the whole dir (like Spark's overwrite), then publish the
+        # file under a hidden temp name first: a kill at any point leaves
+        # either no lineage file, so the stage recomputes, or a complete one
+        path = self._lineage_path(stage)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        tmp = os.path.join(path, ".part-00000.parquet.tmp")
+        table = pa.Table.from_pylist([dict(zip(_LINEAGE_ARROW.names, r)) for r in rows], _LINEAGE_ARROW)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
     # -- DataFrame stages ------------------------------------------------------
     def run_table(self, stage: str, fn, resume: bool = True) -> DataFrame:
+        """Checkpoint `fn()` as `stage`, or, when `resume` and the stage's
+        lineage says complete, read the checkpoint back without calling
+        `fn`. With parquet a fresh stage costs one Spark job, its write:
+        the lineage rows come from the written files' footers, completion
+        is read on the driver, and the read-back reuses the schema just
+        written instead of inferring it. `duration_sec` covers compute and
+        write."""
         if resume and self.is_complete(stage):
             return self._read_table(stage)
         t0 = time.time()
         df = fn()
         self._write_table(df, stage)
-        on_disk = self._read_table(stage)
-        self._write_lineage(stage, on_disk, duration_sec=time.time() - t0)
-        return on_disk
+        self._write_lineage(stage, duration_sec=time.time() - t0)
+        return self._read_table(stage, schema=df.schema)
 
     # -- small JSON artifacts (phrase tables, synsets, tree) -------------------
     def run_artifact(self, stage: str, fn, resume: bool = True):

@@ -126,7 +126,7 @@ def main() -> None:
         # operator reads off a 1000-executor run to find the stage to salt
         from llm_review_aggregation_spark.plans.lineage import StageStore, skew_advice
 
-        metrics = StageStore(spark, args.work_dir).metrics()
+        metrics = StageStore(spark, args.work_dir, table_format=cfg.table_format).metrics()
         report["stages"] = [row.asDict() for row in metrics.orderBy("stage").collect()]
         # skew metric -> action: name the stage to salt before the next
         # scale-up (operators/skew.salted_agg is the remediation entry point)

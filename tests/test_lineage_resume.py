@@ -2,6 +2,7 @@
 
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,10 +73,97 @@ def test_stage_metrics_rollup(spark, work_dir):
     assert m["stage_skewed"]["partition_skew"] == 1.8  # 90 / mean(90, 10)
 
 
+def _spark_rollup(spark, path):
+    """(partition_id, output_rows) as lineage rows were computed before they
+    came from the parquet footers: a Spark groupBy of the table's rows on
+    the writer task's part-NNNNN of the file each row was read from."""
+    pid = F.regexp_extract(F.col("_metadata.file_name"), r"part-(\d+)", 1).cast("int")
+    return sorted(tuple(r) for r in spark.read.parquet(path).groupBy(pid).count().collect())
+
+
+def _lineage_rows(store, stage):
+    lin = store.lineage().filter(F.col("stage") == stage)
+    return sorted((r["partition_id"], r["output_rows"]) for r in lin.collect())
+
+
+def _data_files(path):
+    return [f for f in os.listdir(path) if not f.startswith(("_", "."))]
+
+
+def test_footer_lineage_matches_spark_rollup_multi_file_tasks(spark, work_dir):
+    """A task that writes several files (maxRecordsPerFile) is one
+    partition_id whose output_rows sum over its files."""
+    store = StageStore(spark, work_dir)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    try:
+        store.run_table("stage_split", lambda: spark.range(0, 100, 1, 4))
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    path = os.path.join(work_dir, "stage_split")
+    assert len(_data_files(path)) == 12  # 4 tasks x (10 + 10 + 5 rows)
+    assert _lineage_rows(store, "stage_split") == _spark_rollup(spark, path)
+    assert _lineage_rows(store, "stage_split") == [(i, 25) for i in range(4)]
+
+
+def test_footer_lineage_matches_spark_rollup_bucketed(spark, work_dir):
+    """A bucketed stage's task writes one file per bucket it holds rows for."""
+    store = StageStore(spark, work_dir, bucket_spec={"stage_bkt": ("k", 4)})
+    store.run_table(
+        "stage_bkt", lambda: spark.range(0, 200, 1, 3).withColumn("k", F.col("id") % 7)
+    )
+    path = os.path.join(work_dir, "stage_bkt")
+    assert len(_data_files(path)) > 3
+    rows = _lineage_rows(store, "stage_bkt")
+    assert rows == _spark_rollup(spark, path)
+    assert sum(n for _, n in rows) == 200
+
+
+def _jobs_submitted(spark, fn):
+    """Number of Spark jobs `fn` submits, counted through its own job group."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_bookkeeping_job_budget(spark, work_dir):
+    """A fresh narrow stage costs one Spark job, its write: lineage comes
+    from the footers, completion and the read-back schema need no job."""
+    store = StageStore(spark, work_dir)
+    assert _jobs_submitted(spark, lambda: store.run_table("stage_j", lambda: spark.range(0, 100, 1, 4))) == 1
+    assert _jobs_submitted(spark, lambda: store.is_complete("stage_j")) == 0
+    assert store.is_complete("stage_j")
+
+
+def test_is_complete_reads_spark_written_lineage(spark, work_dir):
+    """Lineage dirs written by Spark (several part files beside _SUCCESS and
+    .crc files) still resume; a dir holding only an unpublished temp file
+    does not."""
+    spark.createDataFrame(
+        [("old", 0, 3, 1.0, "complete", 0.5), ("old", 1, 4, 1.0, "complete", 0.5)],
+        "stage string, partition_id int, output_rows long, checkpoint_ts double, "
+        "status string, duration_sec double",
+    ).repartition(2).write.parquet(os.path.join(work_dir, "_lineage", "old"))
+    store = StageStore(spark, work_dir)
+    assert store.is_complete("old")
+    killed = os.path.join(work_dir, "_lineage", "killed")
+    os.makedirs(killed)
+    with open(os.path.join(killed, ".part-00000.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1")
+    assert not store.is_complete("killed")
+    assert not store.is_complete("never_ran")
+
+
 def test_empty_stage_records_lineage(spark, work_dir):
     store = StageStore(spark, work_dir)
     store.run_table("stage_empty", lambda: spark.range(5).filter(F.col("id") < 0))
     assert store.is_complete("stage_empty")
+    assert _lineage_rows(store, "stage_empty") == [(-1, 0)]
     df = store.run_table("stage_empty", lambda: (_ for _ in ()).throw(AssertionError("recomputed")))
     assert df.count() == 0
 

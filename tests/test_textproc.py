@@ -5,6 +5,7 @@ The clean-text cases mirror the reference's behavioral contract
 drop special characters, ASCII-fold, lowercase.
 """
 
+import pandas as pd
 import pytest
 
 from llm_review_aggregation_spark import textproc as tp
@@ -206,18 +207,19 @@ class TestTokenizerBackendSeam:
     def test_fused_segment_null_url_parity(self, spark):
         """ADVICE round-5: a null url must yield a NULL group_id from the
         fused E1+E2 path exactly like the unfused regexp_extract (which is
-        null-propagating), and a non-matching non-null url must yield ""."""
+        null-propagating), and a non-matching non-null url must yield "".
+        The driver-side oracle must accept the same pages and agree."""
         from llm_review_aggregation_spark.functions import cleaning
         from llm_review_aggregation_spark.functions import tokenize as tk
+        from llm_review_aggregation_spark.oracle import pipeline_oracle as oracle
 
-        pages = spark.createDataFrame(
-            [
-                (None, "one sentence here."),
-                ("no-scheme-url", "another sentence."),
-                ("http://h/cam1/r1", "a third sentence."),
-            ],
-            "url string, html string",
+        pages_pdf = pd.DataFrame(
+            {
+                "url": [None, "no-scheme-url", "http://h/cam1/r1"],
+                "html": ["one sentence here.", "another sentence.", "a third sentence."],
+            }
         )
+        pages = spark.createDataFrame(pages_pdf, "url string, html string")
 
         def key(rows):
             return sorted(
@@ -231,6 +233,7 @@ class TestTokenizerBackendSeam:
         fused = key(tk.segment_pages(pages).collect())
         unfused = key(tk.segment_sentences(cleaning.extract_docs(pages)).collect())
         assert fused == unfused
+        assert key(oracle.sentences_from_docs(oracle.docs_from_pages(pages_pdf))) == fused
         by_url = {u: g for (u, g, *_rest) in fused}
         assert by_url[None] is None
         assert by_url["no-scheme-url"] == ""
