@@ -22,7 +22,7 @@ def clean_text_udf(html: pd.Series) -> pd.Series:
 
 def extract_doc_groups(pages: DataFrame) -> DataFrame:
     """pages -> (url, group_id) with NO text extraction — the cheap
-    projection consumers like E7's review-count cogroup need (one row per
+    projection consumers like E7's per-group review count need (one row per
     document). Keeping it UDF-free guarantees the lazy plan never pulls
     the clean_text pass in just to count documents per group."""
     return pages.select(

@@ -4,15 +4,15 @@ scored opinion rows (the `arguments` table).
 The reference builds one Python Framework per product and re-runs BERT per
 group (arg_framework/run.py:120-122 — its main scalability cliff). This
 engine scores every phrase once in a single Arrow-batched pass, then runs
-the whole QBAF/DF-QuAD computation per group in ONE cogrouped
-`applyInPandas` — one shuffle on group_id total:
+the QBAF/DF-QuAD computation for ALL the groups of a partition in one
+vectorized `mapInPandas` pass keyed by group — one shuffle on group_id:
 
     sentences --T6--> phrases --T9 glossary match--> (phrase, node) spans
       --M3 scorer--> sentiments                      [distributed, 1 pass]
-      --cogroup(docs, scored) by group_id-->         [the only shuffle]
-        per group (vectorized pandas):
+      U docs.groupBy(group_id).count()  --repartition(group_id)-->
+        per partition, every op keyed by group (pandas/numpy):
           A8 phrase/review votes -> A9 ancestor augmentation ->
-          A10-A12 sums/polarity/supporter-attacker ->
+          A10-A12 sums/polarity/supporter-attacker ([groups x nodes]) ->
           A13-A14 DF-QuAD strengths (post-order) ->
           A16/A17 strongest phrases + features
     arguments(group_id, aspect, polarity, strength, ...)
@@ -23,12 +23,11 @@ shape). Reference list-order ties are pinned with explicit orderings
 (SURVEY §7 R1).
 
 Scale: the per-group state is bounded — <=100 tree nodes and one product's
-matched phrases — so each pandas group is small; AQE skew-join/partition
-handling covers pathological groups. The previous implementation expressed
-A9/A14 as per-tree-depth DataFrame self-joins; correct, but each depth level
-cost a full scheduling round-trip + checkpoint barrier, which dominated wall
-time (fixed cost ~x10 the actual compute). The cogroup form has identical
-semantics and one shuffle.
+matched phrases. Every sort, dedupe and array op is keyed by group so the
+Python cost is paid per partition, not per group: one pandas call per
+group costs ~100 ms of fixed overhead, and AQE packs many small groups into
+one task, where such calls run one after another. A null group_id (null
+url) is a group of its own, as in a groupBy.
 """
 
 from __future__ import annotations
@@ -63,134 +62,134 @@ def _postorder(edges: dict[str, str], root: str) -> list[str]:
     return out
 
 
-def _combine(strengths: list[float]) -> float:
-    """DF-QuAD combined strength: 1 - prod(1 - s_i) (framework.py:181-194)."""
-    prod = 1.0
-    for s in strengths:
-        prod *= 1.0 - s
-    return 1.0 - prod if strengths else 0.0
+def _combine(strengths: np.ndarray, mask: np.ndarray) -> np.ndarray:
+    """DF-QuAD combined strength per row, 1 - prod(1 - s_i) over the masked
+    columns (framework.py:181-194); 0 when none is masked. Factors multiply
+    left to right, so each row equals the scalar loop over its list."""
+    prod = np.ones(strengths.shape[0])
+    for j in range(strengths.shape[1]):
+        prod = np.where(mask[:, j], prod * (1.0 - strengths[:, j]), prod)
+    return 1.0 - prod
 
 
-def _make_per_group(root: str, nodes_post: list[str], children: dict[str, list[str]],
-                    edges: dict[str, str], sentiment_threshold: float):
-    """Build the cogrouped per-group kernel. Vectorized pandas throughout —
-    sorts + drop_duplicates for the max-by votes, a pivot + <=|nodes| column
-    ops for ancestor augmentation; only the <=100-node tree walk is scalar."""
+def _make_kernel(root: str, nodes_post: list[str], edges: dict[str, str],
+                 sentiment_threshold: float):
+    """Build the per-partition kernel over `n_reviews` rows (one per group)
+    unioned with scored phrase rows. Sorts + drop_duplicates for the max-by
+    votes, a [reviews x nodes] array for ancestor augmentation and
+    [groups x nodes] arrays for DF-QuAD; only the <=100-node tree walk is
+    a Python loop."""
+    col = {n: j for j, n in enumerate(nodes_post)}
+    n_nodes = len(nodes_post)
+    kids: dict[str, list[int]] = {}  # edges order: the DF-QuAD product order
+    for c, p in edges.items():
+        kids.setdefault(p, []).append(col[c])
+    by_name_desc = {p: sorted(ks, key=lambda j: nodes_post[j], reverse=True) for p, ks in kids.items()}
+    rj = col[root]
 
-    def per_group(key, docs_pdf: pd.DataFrame, scored: pd.DataFrame) -> pd.DataFrame:
-        g = key[0]
-        n_reviews = len(docs_pdf)
-        if n_reviews == 0:
-            return pd.DataFrame(
-                columns=[
-                    "group_id", "aspect", "polarity", "strength",
-                    "strongest_support_phrase", "strongest_attack_phrase",
-                    "strongest_support_feature", "strongest_attack_feature",
-                ]
-            )
-
-        n_args = scored.groupby("phrase_id").size() if len(scored) else pd.Series(dtype=int)
+    def kernel(batches):
+        parts = list(batches)  # a group may span Arrow batches
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        codes, _ = pd.factorize(pdf["group_id"], use_na_sentinel=False)
+        is_count = pdf["n_reviews"].notna().to_numpy()
+        if not is_count.any():
+            return
+        counts = pdf[is_count]
+        groups = counts["group_id"].to_numpy(object)
+        n_rev = counts["n_reviews"].to_numpy(float)[:, None]
+        gcode = np.full(codes.max() + 1, -1)
+        gcode[codes[is_count]] = np.arange(len(counts))
+        scored = pdf[~is_count].assign(g=gcode[codes[~is_count]])
+        scored = scored[scored["g"] >= 0]
+        n_groups = len(groups)
 
         # A8a: per-(url, phrase, node) vote = max-abs sentiment; tie -> min start
-        v = scored[scored["sentiment"].abs() > sentiment_threshold]
-        if len(v):
-            v = v.assign(absv=v["sentiment"].abs()).sort_values(
-                ["absv", "start"], ascending=[False, True], kind="mergesort"
-            )
-            pv = v.drop_duplicates(["url", "phrase_id", "node"]).rename(
-                columns={"sentiment": "vote"}
-            )[["url", "phrase_id", "phrase_ord", "phrase", "node", "vote"]]
-        else:
-            pv = pd.DataFrame(columns=["url", "phrase_id", "phrase_ord", "phrase", "node", "vote"])
+        single = ~scored.duplicated(["g", "phrase_id"], keep=False)
+        v = scored.assign(single=single, absv=scored["sentiment"].abs())
+        v = v[v["absv"] > sentiment_threshold].sort_values(
+            ["g", "absv", "start"], ascending=[True, False, True], kind="mergesort"
+        )
+        pv = v.drop_duplicates(["g", "url", "phrase_id", "node"]).rename(columns={"sentiment": "vote"})
 
         # A8b: per-(url, node) review vote = sign of max-abs; tie -> min phrase_ord
-        if len(pv):
-            rv = pv.assign(absv=pv["vote"].abs()).sort_values(
-                ["absv", "phrase_ord"], ascending=[False, True], kind="mergesort"
-            ).drop_duplicates(["url", "node"])
-            rv = rv.assign(rvote=np.where(rv["vote"] > 0, 1.0, -1.0))[["url", "node", "rvote"]]
-        else:
-            rv = pd.DataFrame(columns=["url", "node", "rvote"])
+        rv = pv.sort_values(
+            ["g", "absv", "phrase_ord"], ascending=[True, False, True], kind="mergesort"
+        ).drop_duplicates(["g", "url", "node"])
 
-        # A9: per-url ancestor augmentation, children-before-parents
-        if len(rv):
-            piv = rv.pivot(index="url", columns="node", values="rvote").reindex(
-                columns=nodes_post
-            )
-            for n in nodes_post:
-                kids = children.get(n, [])
-                if not kids:
-                    continue
-                s = piv[kids].sum(axis=1)
-                fill = piv[n].isna() & (s != 0)
-                if fill.any():
-                    piv.loc[fill, n] = np.sign(s[fill])
-            asum = piv.sum(axis=0).reindex(nodes_post).fillna(0.0)
-        else:
-            asum = pd.Series(0.0, index=nodes_post)
+        # A9: per-review ancestor augmentation, children-before-parents
+        review = rv.groupby(["g", "url"], dropna=False, sort=False).ngroup().to_numpy()
+        votes = np.full((review.max() + 1 if len(review) else 0, n_nodes), np.nan)
+        votes[review, rv["node"].map(col).to_numpy(int)] = np.where(rv["vote"] > 0, 1.0, -1.0)
+        for n in nodes_post:
+            if n in kids:
+                s = np.nansum(votes[:, kids[n]], axis=1)
+                fill = np.isnan(votes[:, col[n]]) & (s != 0)
+                votes[fill, col[n]] = np.sign(s[fill])
+        review_group = np.zeros(len(votes), dtype=int)
+        review_group[review] = rv["g"].to_numpy()
+        asum = np.zeros((n_groups, n_nodes))
+        np.add.at(asum, review_group, np.nan_to_num(votes))
 
         # A10-A12: polarity, base strengths, supporter/attacker partition
-        polar = {n: bool(asum[n] >= 0) for n in nodes_post}
-        base = {
-            n: (0.5 + 0.5 * asum[n] / n_reviews) if n == root else abs(asum[n]) / n_reviews
-            for n in nodes_post
-        }
-        sup: dict[str, list[str]] = {n: [] for n in nodes_post}
-        att: dict[str, list[str]] = {n: [] for n in nodes_post}
-        for c, p in edges.items():
-            (sup if polar[p] == polar[c] else att)[p].append(c)
+        polar = asum >= 0
+        base = np.abs(asum) / n_rev
+        base[:, rj] = 0.5 + 0.5 * asum[:, rj] / n_rev[:, 0]
 
         # A13-A14: DF-QuAD, post-order (children precede parents)
-        strength: dict[str, float] = {}
+        strength = np.empty((n_groups, n_nodes))
         for n in nodes_post:
-            a = _combine([strength[c] for c in att[n]])
-            s_ = _combine([strength[c] for c in sup[n]])
-            b = base[n]
-            if a > s_:
-                strength[n] = b - b * abs(a - s_)
-            elif a < s_:
-                strength[n] = b + (1.0 - b) * abs(a - s_)
-            else:
-                strength[n] = b
+            j, b = col[n], base[:, col[n]]
+            ks = kids.get(n, [])
+            same = polar[:, ks] == polar[:, [j]]
+            a = _combine(strength[:, ks], ~same)
+            s_ = _combine(strength[:, ks], same)
+            d = np.abs(a - s_)
+            strength[:, j] = np.where(a > s_, b - b * d, np.where(a < s_, b + (1.0 - b) * d, b))
 
         # A17: strongest sub-feature = argmax (strength, name)
-        def best_feat(cands: list[str]) -> str | None:
-            return max(cands, key=lambda c: (strength[c], c)) if cands else None
+        feats = {True: np.full((n_groups, n_nodes), None, object),
+                 False: np.full((n_groups, n_nodes), None, object)}
+        for p, ks in by_name_desc.items():
+            j = col[p]
+            for support, out in feats.items():
+                top = np.full(n_groups, -np.inf)
+                for k in ks:  # name-descending + strict '>' -> larger name wins ties
+                    up = ((polar[:, k] == polar[:, j]) == support) & (strength[:, k] > top)
+                    out[up, j] = nodes_post[k]
+                    top = np.where(up, strength[:, k], top)
 
         # A16: strongest phrases — single-arg, well-formatted, top-5 by vote,
         # then longest (tie -> earliest of the top-5 ordering)
-        best_sup: dict[str, str] = {}
-        best_att: dict[str, str] = {}
-        if len(pv):
-            pool = pv[
-                pv["phrase_id"].map(n_args).eq(1)
-                & pv["phrase"].map(tp.is_well_formatted)
-            ]
-            for node, sub in pool.groupby("node"):
-                for positive, dest in ((True, best_sup), (False, best_att)):
-                    side = sub[sub["vote"] > 0] if positive else sub[sub["vote"] < 0]
-                    if not len(side):
-                        continue
-                    side = side.sort_values(
-                        ["vote", "phrase_ord"], ascending=[not positive, True], kind="mergesort"
-                    ).head(5)
-                    lens = side["phrase"].str.len().to_numpy()
-                    dest[node] = side["phrase"].iloc[int(np.argmax(lens))]
+        phrases = {True: np.full((n_groups, n_nodes), None, object),
+                   False: np.full((n_groups, n_nodes), None, object)}
+        pool = pv[pv["single"] & (pv["vote"] != 0) & pv["phrase"].map(tp.is_well_formatted).astype(bool)]
+        pool = pool.assign(attack=pool["vote"] < 0).sort_values(
+            ["g", "node", "attack", "absv", "phrase_ord"],
+            ascending=[True, True, True, False, True], kind="mergesort",
+        )
+        keys = ["g", "node", "attack"]
+        top5 = pool[pool.groupby(keys).cumcount() < 5].reset_index(drop=True)
+        best = top5.loc[top5.assign(L=top5["phrase"].str.len()).groupby(keys)["L"].idxmax()]
+        for attack, sub in best.groupby("attack"):
+            at = (sub["g"].to_numpy(), sub["node"].map(col).to_numpy(int))
+            phrases[not attack][at] = sub["phrase"].to_numpy()
 
-        return pd.DataFrame(
+        yield pd.DataFrame(
             {
-                "group_id": g,
-                "aspect": nodes_post,
-                "polarity": [polar[n] for n in nodes_post],
-                "strength": [strength[n] for n in nodes_post],
-                "strongest_support_phrase": [best_sup.get(n) for n in nodes_post],
-                "strongest_attack_phrase": [best_att.get(n) for n in nodes_post],
-                "strongest_support_feature": [best_feat(sup[n]) for n in nodes_post],
-                "strongest_attack_feature": [best_feat(att[n]) for n in nodes_post],
+                "group_id": np.repeat(groups, n_nodes),
+                "aspect": np.tile(np.array(nodes_post, dtype=object), n_groups),
+                "polarity": polar.ravel(),
+                "strength": strength.ravel(),
+                "strongest_support_phrase": phrases[True].ravel(),
+                "strongest_attack_phrase": phrases[False].ravel(),
+                "strongest_support_feature": feats[True].ravel(),
+                "strongest_attack_feature": feats[False].ravel(),
             }
         )
 
-    return per_group
+    return kernel
 
 
 _SCORED_SCHEMA = (
@@ -262,19 +261,15 @@ def extract_arguments(
 ) -> DataFrame:
     parents: dict[str, str | None] = {root: None, **edges}
     nodes_post = _postorder(edges, root)
-    children: dict[str, list[str]] = {}
-    for c, p in sorted(edges.items()):
-        children.setdefault(p, []).append(c)
 
     # ---- T6 + T9 + M3: distributed, one fused pass over cached sentences --
     scored = _fused_phrase_scores(
         sentences, nodes_post, parents, glossary, sentiment_scorer, phrase_max_words
     )
 
-    per_group = _make_per_group(root, nodes_post, children, dict(edges), sentiment_threshold)
+    n_reviews = docs.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_reviews"))
     return (
-        docs.select("group_id")
-        .groupBy("group_id")
-        .cogroup(scored.groupBy("group_id"))
-        .applyInPandas(per_group, _OUT_SCHEMA)
+        scored.unionByName(n_reviews, allowMissingColumns=True)
+        .repartition("group_id")
+        .mapInPandas(_make_kernel(root, nodes_post, dict(edges), sentiment_threshold), _OUT_SCHEMA)
     )

@@ -25,6 +25,13 @@ from llm_review_aggregation_spark.operators import tree as tree_ops
 _GROUP_RE = re.compile(r"^[a-z]+://[^/]+/([^/]+)/")
 
 
+def _none_first(key):
+    """Sort key for group/url values and tuples of them: a null url gives a
+    null group, which plain `sorted` cannot order against strings."""
+    vals = key if isinstance(key, tuple) else (key,)
+    return tuple((v is not None, v or "") for v in vals)
+
+
 def _group_id(url):
     # the engine's regexp_extract: a null url gives a null group_id, a url
     # that does not match gives ""
@@ -278,7 +285,7 @@ def arguments(
 
     # augmentation: post-order, per (group, url)
     review_keys = {(g, u) for g, u, _ in votes}
-    for g, u in sorted(review_keys):
+    for g, u in sorted(review_keys, key=_none_first):
         for node in postorder:
             if (g, u, node) in votes:
                 continue
@@ -288,7 +295,7 @@ def arguments(
 
     # per-group aggregates
     n_reviews = Counter(d["group_id"] for d in docs)
-    groups = sorted(n_reviews)
+    groups = sorted(n_reviews, key=_none_first)
     nodes = postorder
     asum = {(g, n): 0.0 for g in groups for n in nodes}
     for (g, u, n), v in votes.items():

@@ -255,7 +255,7 @@ def run_pipeline(
     # E7 --------------------------------------------------------------------
     tree_nodes = set(tree_edges) | set(tree_edges.values()) | {root_name}
     glossary = {n: synset_map.get(n, [n]) for n in tree_nodes}
-    # E7's cogroup needs one (group_id) row per document, nothing else —
+    # E7's review counts need one (group_id) row per document, nothing else —
     # derive it straight from pages (url regex, no clean_text UDF) so the
     # lazy/ephemeral path never recomputes E1 text extraction for it
     doc_groups = cleaning.extract_doc_groups(pages)

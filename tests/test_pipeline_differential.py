@@ -24,7 +24,10 @@ def spark_result(spark):
 
 @pytest.fixture(scope="module")
 def oracle_result():
-    pages_pdf = synth.synthesize_pages_pdf(n_groups=N_GROUPS, docs_per_group=DOCS)
+    return run_oracle(synth.synthesize_pages_pdf(n_groups=N_GROUPS, docs_per_group=DOCS))
+
+
+def run_oracle(pages_pdf):
     ent, rel, sent = scoring.make_scorers(CFG.scorer, CFG.scorer_params)
     docs = oracle.docs_from_pages(pages_pdf)
     sentences = oracle.sentences_from_docs(docs)
@@ -138,3 +141,37 @@ def test_arguments_match_oracle(spark_result, oracle_result):
         g = got[col].where(pd.notna(got[col]), None).tolist()
         w = want[col].where(pd.notna(want[col]), None).tolist()
         assert g == w, (col, [(i, a, b) for i, (a, b) in enumerate(zip(g, w)) if a != b][:5])
+
+
+def _none_safe(df):
+    return (
+        df.assign(_g=df["group_id"].map(repr))
+        .sort_values(["_g", "aspect"])
+        .drop(columns="_g")
+        .reset_index(drop=True)
+    )
+
+
+def test_null_url_arguments_match_oracle(spark):
+    """A null url gives a null group_id and a url without a scheme gives "";
+    both are groups of their own, in the engine and in the oracle alike.
+    A kernel that drops NaN group keys loses the null group's rows here."""
+    pages_pdf = synth.synthesize_pages_pdf(n_groups=N_GROUPS, docs_per_group=DOCS)
+    pages_pdf.loc[0, "url"] = None
+    pages_pdf.loc[DOCS, "url"] = "no-scheme-url"
+    got = _none_safe(run_pipeline(spark, spark.createDataFrame(pages_pdf), CFG).arguments.toPandas())
+    want = _none_safe(run_oracle(pages_pdf)["arguments"])
+    assert None in set(got["group_id"]) and "" in set(got["group_id"])
+    assert len(got) == len(want), (len(got), len(want))
+    for col in ["group_id", "aspect", "polarity"]:
+        assert got[col].tolist() == want[col].tolist(), col
+    assert (got["strength"] - want["strength"]).abs().max() < 1e-9
+    for col in [
+        "strongest_support_phrase",
+        "strongest_attack_phrase",
+        "strongest_support_feature",
+        "strongest_attack_feature",
+    ]:
+        g = got[col].where(pd.notna(got[col]), None).tolist()
+        w = want[col].where(pd.notna(want[col]), None).tolist()
+        assert g == w, col

@@ -8,12 +8,14 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from llm_review_aggregation_spark import textproc as tp
 from llm_review_aggregation_spark.functions.textstats import _simhash64
-from llm_review_aggregation_spark.operators.argumentation import _combine
+from llm_review_aggregation_spark.operators import argumentation
 from llm_review_aggregation_spark.operators.canonicalize import _minhash_signature
 
 words = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
@@ -75,6 +77,11 @@ class TestMinhash:
         assert all(y <= x for x, y in zip(sa, sb))
 
 
+def _combine(vals: list[float]) -> float:
+    """The vectorized DF-QuAD combine on one row, every column masked in."""
+    return float(argumentation._combine(np.array([vals], dtype=float), np.ones((1, len(vals)), bool))[0])
+
+
 class TestDFQuad:
     @given(st.lists(st.floats(min_value=0.0, max_value=1.0, allow_nan=False), max_size=8))
     def test_combine_bounds(self, vals):
@@ -92,6 +99,24 @@ class TestDFQuad:
         vals = [0.2, 0.5, 0.9]
         want = 1 - math.prod(1 - v for v in vals)
         assert abs(_combine(vals) - want) < 1e-12
+
+    @given(st.lists(st.floats(min_value=0.0, max_value=1.0, allow_nan=False), max_size=8), st.data())
+    def test_combine_rows_are_independent_scalar_loops(self, vals, data):
+        """Each row multiplies only its masked factors, in column order —
+        bit-identical to the scalar loop over that row's list."""
+        mask = np.array(data.draw(st.lists(st.booleans(), min_size=len(vals), max_size=len(vals))), bool)
+        rows = np.array([vals, vals[::-1]], dtype=float)
+        got = argumentation._combine(rows, np.stack([mask, mask[::-1]]))
+
+        def scalar_loop(vs, ms):
+            prod = 1.0
+            for v, m in zip(vs, ms):
+                if m:
+                    prod *= 1.0 - v
+            return 1.0 - prod
+
+        assert got[0] == scalar_loop(vals, mask)
+        assert got[1] == scalar_loop(vals[::-1], mask[::-1])
 
 
 class TestPhraseScore:
