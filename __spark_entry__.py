@@ -433,7 +433,6 @@ def _q_kg_triples_pr(spark, sf_dir):
     scale (sf <= 0.01, a few thousand pages). A guard refuses larger
     corpora rather than silently collecting them to the driver — at sf >=
     0.1 use the distributed differential suite instead."""
-    from llm_review_aggregation_spark.functions import scoring
     from llm_review_aggregation_spark.oracle import pipeline_oracle as oracle
 
     cfg = _KG_CFG
@@ -447,29 +446,10 @@ def _q_kg_triples_pr(spark, sf_dir):
         )
     with run_pipeline(spark, pages, cfg) as res:
         got = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
-    ent, rel, sent = scoring.make_scorers(cfg.scorer, cfg.scorer_params)
-    docs = oracle.docs_from_pages(pages.toPandas())
-    sentences = oracle.sentences_from_docs(docs)
-    pairs = oracle.phrase_vocab(sentences, cfg.phrase_min_count, cfg.phrase_threshold)
-    cand = oracle.candidates(sentences, pairs, cfg.n_candidate_aspects)
-    asp = oracle.aspects(sentences, cand, ent, cfg.entity_prob_threshold)
-    top = sorted(asp.items(), key=lambda kv: (-kv[1][0], kv[0]))[: cfg.top_k_aspects_to_keep]
-    aspect_counts = {t: c for t, (c, _p) in top}
-    want: set[tuple[str, str, str]] = set()
-    if aspect_counts:
-        root = cfg.root_name or next(iter(aspect_counts))
-        synset_counts, synset_map = oracle.synsets(sentences, aspect_counts, root, cfg)
-        concepts_list = list(synset_counts)
-        sums, _c = oracle.meronym_scores(sentences, concepts_list, synset_map, rel)
-        edges = oracle.ontology_edges(concepts_list, synset_counts, sums, root)
-        glossary = {n: synset_map.get(n, [n]) for n in (set(edges) | set(edges.values()) | {root})}
-        args = oracle.arguments(
-            sentences, docs, edges, root, glossary, sent,
-            cfg.sentiment_threshold, cfg.phrase_max_words,
-        )
-        want = {(s, "partOf", o) for s, o in edges.items()}
-        for _, r in args.iterrows():
-            want.add((r["group_id"], "hasAspectOpinion", r["aspect"]))
+    ref = oracle.run(pages.toPandas(), cfg)
+    args = ref["arguments"]
+    want = {(s, "partOf", o) for s, o in ref["edges"].items()}
+    want |= {(g, "hasAspectOpinion", a) for g, a in zip(args["group_id"], args["aspect"])}
     tp = len(got & want)
     return spark.createDataFrame(
         [(len(want), len(got), tp / max(len(got), 1), tp / max(len(want), 1))],

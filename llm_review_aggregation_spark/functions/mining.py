@@ -175,22 +175,6 @@ def count_noun_terms(sentences: DataFrame, pairs: set[tuple[str, str]]) -> DataF
     )
 
 
-def count_noun_terms_salted(
-    sentences: DataFrame, pairs: set[tuple[str, str]], salt_mod: int = 16
-) -> DataFrame:
-    """Skew-safe twin of count_noun_terms: the same exploded term stream
-    aggregated through operators/skew.salted_count (groupBy(term, salt) ->
-    partial counts -> merge), so one hot head term spreads over `salt_mod`
-    reducers instead of landing on one. Output is provably identical to
-    count_noun_terms (counts are algebraic); run_pipeline(auto_salt=True)
-    routes the candidates stage here when its lineage flags skew."""
-    from llm_review_aggregation_spark.operators import skew
-
-    udf = make_noun_terms_udf(pairs)
-    toks = sentences.select(F.explode(udf(F.col("tokens"))).alias("term"))
-    return skew.salted_count(toks, ["term"], salt_mod=salt_mod)
-
-
 def top_candidates(term_counts: DataFrame, n: int) -> DataFrame:
     """A2 with the lexicographic tiebreak pinned (SURVEY §7 R1)."""
     return term_counts.orderBy(F.desc("count"), F.asc("term")).limit(n)

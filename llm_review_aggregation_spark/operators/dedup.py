@@ -349,7 +349,13 @@ def ivf_candidate_pairs(
 ) -> DataFrame:
     """The (a, b) candidate set the amplified IVF near-dup join verifies —
     exposed so tests and capacity planning can measure prune (all-pairs /
-    candidates) independently of the exact-cosine verification step."""
+    candidates) independently of the exact-cosine verification step.
+
+    The result is an eager ``localCheckpoint``: the whole candidate
+    computation runs when this function is called, not when the returned
+    DataFrame is first used, and its blocks live only in executor storage.
+    It has no lineage to recompute from, so losing an executor that holds
+    one of its blocks fails the queries that read it; call again to rebuild."""
     require = tables if require is None else require
     if not (1 <= require <= tables):
         raise ValueError(f"require must be in [1, {tables}], got {require}")

@@ -28,10 +28,13 @@ from pyspark.sql import functions as F
 
 
 def with_salt(df: DataFrame, salt_mod: int, col_name: str = "_salt") -> DataFrame:
-    """Deterministic per-row salt (hash of all columns, stable across runs)."""
-    return df.withColumn(
-        col_name, F.pmod(F.hash(F.struct(*[F.col(c) for c in df.columns])), F.lit(salt_mod))
-    )
+    """Per-row salt in [0, salt_mod): a hash of the row's columns AND its
+    row id, so the rows of one hot key spread over the salt values even
+    when the key is the only column. The row id makes the salt fixed for a
+    given input partitioning, not across repartitionings; results do not
+    depend on it, because the merge phase sums or unions the partials."""
+    row = F.struct(*[F.col(c) for c in df.columns])
+    return df.withColumn(col_name, F.pmod(F.hash(row, F.monotonically_increasing_id()), F.lit(salt_mod)))
 
 
 def salted_agg(

@@ -18,7 +18,7 @@ from collections import Counter
 import pandas as pd
 
 from llm_review_aggregation_spark import textproc as tp
-from llm_review_aggregation_spark.functions import embeddings
+from llm_review_aggregation_spark.functions import embeddings, scoring
 from llm_review_aggregation_spark.operators import concepts as concepts_ops
 from llm_review_aggregation_spark.operators import tree as tree_ops
 
@@ -379,3 +379,49 @@ def arguments(
                 }
             )
     return pd.DataFrame(out_rows)
+
+
+# --- the whole chain -----------------------------------------------------------
+
+def run(pages_pdf: pd.DataFrame, cfg) -> dict:
+    """The stage outputs for these pages under ``cfg`` (a PipelineConfig),
+    composed the way plans/pipeline.run_pipeline composes its stages: E5
+    clusters only the ``top_k_aspects_to_keep`` aspects by (count desc,
+    term), the root defaults to the top aspect, and a corpus with no
+    aspects short-circuits to no synsets, edges or arguments."""
+    ent, rel, sent = scoring.make_scorers(cfg.scorer, cfg.scorer_params)
+    docs = docs_from_pages(pages_pdf)
+    sentences = sentences_from_docs(docs)
+    pairs = phrase_vocab(sentences, cfg.phrase_min_count, cfg.phrase_threshold)
+    cand = candidates(sentences, pairs, cfg.n_candidate_aspects)
+    asp = aspects(sentences, cand, ent, cfg.entity_prob_threshold)
+    out = {
+        "docs": docs,
+        "sentences": sentences,
+        "candidates": cand,
+        "aspects": asp,
+        "synsets": {},
+        "edges": {},
+        "arguments": pd.DataFrame(
+            columns=[
+                "group_id", "aspect", "polarity", "strength",
+                "strongest_support_phrase", "strongest_attack_phrase",
+                "strongest_support_feature", "strongest_attack_feature",
+            ]
+        ),
+    }
+    ranked = sorted(asp.items(), key=lambda kv: (-kv[1][0], kv[0]))[: cfg.top_k_aspects_to_keep]
+    if not ranked:
+        return out
+    counts = {t: c for t, (c, _p) in ranked}
+    root = cfg.root_name or ranked[0][0]
+    synset_counts, synset_map = synsets(sentences, counts, root, cfg)
+    concepts_list = list(synset_counts)
+    sums, _n = meronym_scores(sentences, concepts_list, synset_map, rel)
+    edges = ontology_edges(concepts_list, synset_counts, sums, root)
+    glossary = {n: synset_map.get(n, [n]) for n in set(edges) | set(edges.values()) | {root}}
+    args = arguments(
+        sentences, docs, edges, root, glossary, sent, cfg.sentiment_threshold, cfg.phrase_max_words
+    )
+    out.update(synsets=synset_map, edges=edges, arguments=args)
+    return out

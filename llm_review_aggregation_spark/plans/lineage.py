@@ -315,13 +315,14 @@ class StageStore:
 
 
 def skew_advice(metrics_df: DataFrame, threshold: float = 4.0) -> list[dict]:
-    """Turn the per-stage `partition_skew` metric into an action: stages
-    whose max-partition/mean-partition row ratio exceeds `threshold` get a
-    flagged row naming the remediation entry point (operators/skew.py
-    salted_agg — two-stage salted pre-aggregation — or an explicit
-    repartition before the hot stage). Single-partition stages can't be
-    skewed by definition and tiny stages aren't worth salting, so both are
-    exempt. Returned as plain dicts so the CLI report can embed it."""
+    """Turn the per-stage `partition_skew` metric into advice for a manual
+    fix: stages whose max-partition/mean-partition row ratio exceeds
+    `threshold` get a flagged row naming what to change before the next run
+    (operators/skew.py salted_agg, or a repartition on a finer key). Nothing
+    acts on it: the metric is a checkpoint's output layout, not a task's
+    load. Single-partition stages can't be skewed by definition and tiny
+    stages aren't worth salting, so both are exempt. Returned as plain dicts
+    so the CLI report can embed it."""
     rows = metrics_df.filter(
         (F.col("partition_skew") >= threshold)
         & (F.col("n_partitions") > 1)
@@ -335,9 +336,10 @@ def skew_advice(metrics_df: DataFrame, threshold: float = 4.0) -> list[dict]:
             "output_rows": r["output_rows"],
             "advice": (
                 "partition skew exceeds "
-                f"{threshold}x: pre-aggregate with a salted key "
+                f"{threshold}x: before the next run, rewrite this stage's "
+                "aggregate with a salted key "
                 "(llm_review_aggregation_spark.operators.skew.salted_agg) or "
-                "repartition on a finer key before this stage"
+                "repartition its input on a finer key"
             ),
         }
         for r in rows

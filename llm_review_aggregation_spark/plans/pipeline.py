@@ -71,7 +71,6 @@ def run_pipeline(
     work_dir: str | None = None,
     resume: bool = True,
     bucket_triples: int | None = None,
-    auto_salt: bool = False,
 ) -> PipelineResult:
     """``bucket_triples=N`` writes the triples checkpoint hash-bucketed (and
     sorted) on `subj` into N buckets (requires work_dir, parquet format):
@@ -80,62 +79,26 @@ def run_pipeline(
     Exchange on the triples side (asserted in tests/test_bucketing.py).
     One shuffle at materialize time buys shuffle-free repeated reads; the
     reference's analog is the Postgres index its join queries lean on
-    (db/manager.py:321-326).
-
-    ``auto_salt=True`` (requires work_dir) turns the lineage skew metric
-    into an automatic action on resume: stages a PREVIOUS run's lineage
-    flags via plans/lineage.skew_advice re-run with a remediation instead
-    of being skipped-as-complete —
-
-    - ``candidates`` (the one aggregate stage with a salted twin) re-runs
-      through functions/mining.count_noun_terms_salted, the two-stage
-      salted count from operators/skew;
-    - any other flagged stage re-runs with an explicit balanced
-      repartition before its checkpoint write, evening out the partition
-      layout downstream scans read.
-
-    Both remediations are row-identical to the plain stage (tested in
-    tests/test_auto_salt.py), so downstream completed checkpoints stay
-    valid and are still resumed."""
+    (db/manager.py:321-326)."""
     bucket_spec = {"triples": ("subj", bucket_triples)} if bucket_triples else None
     store = (
         StageStore(spark, work_dir, table_format=cfg.table_format, bucket_spec=bucket_spec)
         if work_dir
         else EphemeralStore(spark)
     )
-    flagged: set[str] = set()
-    if auto_salt and work_dir:
-        from llm_review_aggregation_spark.plans.lineage import skew_advice
-
-        try:
-            flagged = {a["stage"] for a in skew_advice(store.metrics())}
-        except Exception:
-            flagged = set()  # first run: no lineage to consult yet
-
-    def run_stage(name, fn, salted_fn=None, resume_stage: bool | None = None):
-        """StageStore.run_table with the auto-salt remediation wired in:
-        a flagged stage ignores its complete checkpoint and re-runs via its
-        salted twin (if registered) or a balanced-repartition rewrite."""
-        if name in flagged:
-            remedied = salted_fn or (
-                lambda: fn().repartition(spark.sparkContext.defaultParallelism)
-            )
-            return store.run_table(name, remedied, resume=False)
-        return store.run_table(name, fn, resume if resume_stage is None else resume_stage)
-
     entity_scorer, relation_scorer, sentiment_scorer = scoring.make_scorers(cfg.scorer, cfg.scorer_params)
 
     # E1/E2 ---------------------------------------------------------------
-    docs = run_stage("docs", lambda: cleaning.extract_docs(pages))
+    docs = store.run_table("docs", lambda: cleaning.extract_docs(pages), resume)
     # Ephemeral (no work_dir): E1+E2 run FUSED straight from pages — the
     # cleaned text crosses the Arrow boundary once instead of chaining two
     # Python runners (tokenize.segment_pages; byte-identical semantics,
     # differential-tested). With a work_dir the docs checkpoint already
     # holds the cleaned text, so segmenting reads it instead of re-cleaning.
     if work_dir:
-        sentences = run_stage("sentences", lambda: tokenize.segment_sentences(docs))
+        sentences = store.run_table("sentences", lambda: tokenize.segment_sentences(docs), resume)
     else:
-        sentences = run_stage("sentences", lambda: tokenize.segment_pages(pages))
+        sentences = store.run_table("sentences", lambda: tokenize.segment_pages(pages), resume)
     sentences.cache()
 
     # E3 --------------------------------------------------------------------
@@ -145,20 +108,19 @@ def run_pipeline(
         resume,
     )
     pair_set = {tuple(p) for p in pairs}
-    candidates = run_stage(
+    candidates = store.run_table(
         "candidates",
         lambda: mining.top_candidates(
             mining.count_noun_terms(sentences, pair_set), cfg.n_candidate_aspects
         ),
-        salted_fn=lambda: mining.top_candidates(
-            mining.count_noun_terms_salted(sentences, pair_set), cfg.n_candidate_aspects
-        ),
+        resume,
     )
 
     # E4 --------------------------------------------------------------------
-    aspects_df = run_stage(
+    aspects_df = store.run_table(
         "aspects",
         lambda: aspects_ops.extract_aspects(sentences, candidates, entity_scorer, cfg.entity_prob_threshold),
+        resume,
     )
 
     # E5 --------------------------------------------------------------------
@@ -233,22 +195,25 @@ def run_pipeline(
     synset_map = {k: list(v) for k, v in concept_art["synsets"].items()}
 
     synsets_rows = [(c, m, synset_counts[c]) for c, ms in synset_map.items() for m in ms]
-    synsets_df = run_stage(
+    synsets_df = store.run_table(
         "synsets",
         lambda: spark.createDataFrame(synsets_rows, "concept string, member string, count long"),
+        resume,
     )
 
     # E6 --------------------------------------------------------------------
     concepts_list = list(synset_counts)
-    meronym_scores = run_stage(
+    meronym_scores = store.run_table(
         "meronym_scores",
         lambda: relations_ops.accumulate_meronym_scores(sentences, concepts_list, synset_map, relation_scorer),
+        resume,
     )
-    ontology_edges = run_stage(
+    ontology_edges = store.run_table(
         "ontology_edges",
         lambda: relations_ops.build_ontology_edges(
             spark, meronym_scores, concepts_list, synset_counts, root_name
         ),
+        resume,
     )
     tree_edges = {r["subj"]: r["obj"] for r in ontology_edges.collect()}
 
@@ -259,7 +224,7 @@ def run_pipeline(
     # derive it straight from pages (url regex, no clean_text UDF) so the
     # lazy/ephemeral path never recomputes E1 text extraction for it
     doc_groups = cleaning.extract_doc_groups(pages)
-    arguments = run_stage(
+    arguments = store.run_table(
         "arguments",
         lambda: argumentation.extract_arguments(
             spark,
@@ -272,6 +237,7 @@ def run_pipeline(
             cfg.sentiment_threshold,
             cfg.phrase_max_words,
         ),
+        resume,
     )
 
     # materialize graph ------------------------------------------------------
@@ -284,7 +250,7 @@ def run_pipeline(
         )
         return ontology_edges.select("subj", "pred", "obj", "score").unionByName(opinion)
 
-    triples = run_stage("triples", _triples)
+    triples = store.run_table("triples", _triples, resume)
 
     return PipelineResult(
         docs=docs,

@@ -50,17 +50,9 @@ def main() -> None:
         "buckets (needs --work-dir): downstream subj-keyed joins/rollups "
         "plan without an Exchange",
     )
-    ap.add_argument(
-        "--auto-salt", action="store_true",
-        help="on resume, re-run stages the previous run's lineage flags as "
-        "skewed through their salted/rebalanced twin (see "
-        "run_pipeline(auto_salt=True)); requires --work-dir",
-    )
     args = ap.parse_args()
     if args.bucket_triples and not args.work_dir:
         ap.error("--bucket-triples requires --work-dir")
-    if args.auto_salt and not args.work_dir:
-        ap.error("--auto-salt requires --work-dir (it consults the lineage)")
 
     # Imports resolved from the --py-files zip on executors and driver alike.
     from llm_review_aggregation_spark import synth
@@ -99,8 +91,7 @@ def main() -> None:
 
     t0 = time.monotonic()
     result = run_pipeline(
-        spark, pages, cfg, work_dir=args.work_dir, bucket_triples=args.bucket_triples,
-        auto_salt=args.auto_salt,
+        spark, pages, cfg, work_dir=args.work_dir, bucket_triples=args.bucket_triples
     )
     if args.out:
         # graph tables are partitioned by predicate: queries overwhelmingly
@@ -128,8 +119,8 @@ def main() -> None:
 
         metrics = StageStore(spark, args.work_dir, table_format=cfg.table_format).metrics()
         report["stages"] = [row.asDict() for row in metrics.orderBy("stage").collect()]
-        # skew metric -> action: name the stage to salt before the next
-        # scale-up (operators/skew.salted_agg is the remediation entry point)
+        # skew metric -> advice: name the stage to rewrite by hand before the
+        # next scale-up (operators/skew.salted_agg is the remediation entry point)
         advice = skew_advice(metrics)
         if advice:
             report["skew_advice"] = advice

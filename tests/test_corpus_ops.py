@@ -409,6 +409,17 @@ class TestSkew:
         got = [(r["term"], r["count"]) for r in skew.salted_topk_by_count(toks, "term", 10).collect()]
         assert got == want
 
+    def test_salt_spreads_a_hot_key(self, spark):
+        """One key, the only column, over several partitions: the salt must
+        still take more than one value, or phase 1 sends the whole key to
+        one reducer."""
+        from llm_review_aggregation_spark.operators import skew
+
+        hot = spark.range(5000).select(F.lit("camera").alias("term")).repartition(8)
+        salts = skew.with_salt(hot, 16).select("_salt").distinct().collect()
+        assert len(salts) > 1
+        assert all(0 <= r["_salt"] < 16 for r in salts)
+
     def test_salted_agg_holistic(self, spark):
         from llm_review_aggregation_spark.operators import skew
 

@@ -7,7 +7,6 @@ import pytest
 
 from llm_review_aggregation_spark import synth
 from llm_review_aggregation_spark.config import PipelineConfig
-from llm_review_aggregation_spark.functions import scoring
 from llm_review_aggregation_spark.plans.pipeline import run_pipeline
 
 from llm_review_aggregation_spark.oracle import pipeline_oracle as oracle
@@ -24,38 +23,7 @@ def spark_result(spark):
 
 @pytest.fixture(scope="module")
 def oracle_result():
-    return run_oracle(synth.synthesize_pages_pdf(n_groups=N_GROUPS, docs_per_group=DOCS))
-
-
-def run_oracle(pages_pdf):
-    ent, rel, sent = scoring.make_scorers(CFG.scorer, CFG.scorer_params)
-    docs = oracle.docs_from_pages(pages_pdf)
-    sentences = oracle.sentences_from_docs(docs)
-    pairs = oracle.phrase_vocab(sentences, CFG.phrase_min_count, CFG.phrase_threshold)
-    cand = oracle.candidates(sentences, pairs, CFG.n_candidate_aspects)
-    asp = oracle.aspects(sentences, cand, ent, CFG.entity_prob_threshold)
-    aspect_counts = {t: c for t, (c, _p) in asp.items()}
-    synset_counts, synset_map = oracle.synsets(sentences, aspect_counts, CFG.root_name, CFG)
-    concepts_list = list(synset_counts)
-    sums, _cnts = oracle.meronym_scores(sentences, concepts_list, synset_map, rel)
-    edges = oracle.ontology_edges(concepts_list, synset_counts, sums, CFG.root_name)
-    tree_nodes = set(edges) | set(edges.values()) | {CFG.root_name}
-    glossary = {n: synset_map.get(n, [n]) for n in tree_nodes}
-    args = oracle.arguments(
-        sentences, docs, edges, CFG.root_name, glossary, sent,
-        CFG.sentiment_threshold, CFG.phrase_max_words,
-    )
-    return {
-        "docs": docs,
-        "sentences": sentences,
-        "pairs": pairs,
-        "candidates": cand,
-        "aspects": asp,
-        "synset_counts": synset_counts,
-        "synsets": synset_map,
-        "edges": edges,
-        "arguments": args,
-    }
+    return oracle.run(synth.synthesize_pages_pdf(n_groups=N_GROUPS, docs_per_group=DOCS), CFG)
 
 
 def test_docs_byte_identical(spark_result, oracle_result):
@@ -160,7 +128,7 @@ def test_null_url_arguments_match_oracle(spark):
     pages_pdf.loc[0, "url"] = None
     pages_pdf.loc[DOCS, "url"] = "no-scheme-url"
     got = _none_safe(run_pipeline(spark, spark.createDataFrame(pages_pdf), CFG).arguments.toPandas())
-    want = _none_safe(run_oracle(pages_pdf)["arguments"])
+    want = _none_safe(oracle.run(pages_pdf, CFG)["arguments"])
     assert None in set(got["group_id"]) and "" in set(got["group_id"])
     assert len(got) == len(want), (len(got), len(want))
     for col in ["group_id", "aspect", "polarity"]:
