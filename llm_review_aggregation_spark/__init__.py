@@ -19,4 +19,10 @@ Python UDFs, no RDDs. Every stage checkpoints with per-partition lineage
 rows so runs resume mid-pipeline (plans.pipeline).
 """
 
+from llm_review_aggregation_spark import zipcache
+
 __version__ = "0.1.0"
+
+# every Python worker imports this package when it unpickles an engine
+# kernel; from then on its per-task import-cache reset skips unchanged zips
+zipcache.install()

@@ -50,6 +50,8 @@ _LINEAGE_ARROW = pa.schema([
     ("checkpoint_ts", pa.float64()), ("status", pa.string()), ("duration_sec", pa.float64()),
 ])
 _PART_RE = re.compile(r"part-(\d+)")
+# parquet footer key under which Spark's writer stores the row schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class StageStore:
@@ -129,10 +131,13 @@ class StageStore:
         self, stage: str, kind: str = "table", schema: StructType | None = None
     ) -> DataFrame:
         """`schema`, when the caller knows it (it just wrote the table),
-        spares the plain-parquet read its schema-inference job."""
+        spares the plain-parquet read its schema-inference job; otherwise
+        it comes from a data file's footer, which costs no job either."""
         if self.table_format == "iceberg":
             return self.spark.table(self._table_ident(f"{kind}_{stage}"))
         path = self._table_path(stage) if kind == "table" else self._lineage_path(stage)
+        if schema is None:
+            schema = self._footer_schema(path)
         if kind == "table" and stage in self.bucket_spec:
             name = self._bucket_table_name(stage)
             if not self.spark.catalog.tableExists(name):
@@ -140,15 +145,31 @@ class StageStore:
                 # bucket layout in their names; re-register the external
                 # table so Catalyst recovers outputPartitioning
                 key, n_buckets = self.bucket_spec[stage]
-                schema_ddl = self.spark.read.parquet(path).schema.toDDL()
+                if schema is None:
+                    schema = self.spark.read.parquet(path).schema
                 self.spark.sql(
-                    f"CREATE TABLE {name} ({schema_ddl}) USING PARQUET "
+                    f"CREATE TABLE {name} ({schema.toDDL()}) USING PARQUET "
                     f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
                     f"LOCATION '{path}'"
                 )
             return self.spark.table(name)
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(path)
+
+    @staticmethod
+    def _footer_schema(path: str) -> StructType | None:
+        """The Spark schema Spark's parquet writer stored in the footer of
+        `path`'s first data file (an empty stage still writes one), read on
+        the driver; None when no data file carries it, so the caller falls
+        back to Spark's schema inference."""
+        try:
+            names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+        except OSError:
+            return None
+        if not names:
+            return None
+        raw = (pq.read_schema(os.path.join(path, names[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return None if raw is None else StructType.fromJson(json.loads(raw))
 
     # -- paths ---------------------------------------------------------------
     def _table_path(self, stage: str) -> str:

@@ -140,6 +140,30 @@ def test_checkpoint_bookkeeping_job_budget(spark, work_dir):
     assert store.is_complete("stage_j")
 
 
+@pytest.mark.parametrize(
+    "stage, bucket_spec, make",
+    [
+        ("stage_r", None, lambda s: s.range(0, 100, 1, 4).withColumn("v", F.col("id").cast("string"))),
+        ("stage_r_empty", None, lambda s: s.range(5).filter(F.col("id") < 0)),
+        ("stage_r_bkt", ("k", 4), lambda s: s.range(0, 200, 1, 3).withColumn("k", F.col("id") % 7)),
+    ],
+)
+def test_resume_job_budget(spark, work_dir, stage, bucket_spec, make):
+    """Resuming a complete stage submits no Spark job: the schema comes from
+    a data file's footer, not from inference. A bucketed stage is resumed as
+    in a fresh session, with its catalog table gone."""
+    store = StageStore(spark, work_dir, bucket_spec={stage: bucket_spec} if bucket_spec else None)
+    written = store.run_table(stage, lambda: make(spark))
+    want = sorted(written.collect())
+    if bucket_spec:
+        spark.sql(f"DROP TABLE {store._bucket_table_name(stage)}")
+    resumed = []
+    recompute = lambda: (_ for _ in ()).throw(AssertionError("recomputed"))  # noqa: E731
+    assert _jobs_submitted(spark, lambda: resumed.append(store.run_table(stage, recompute))) == 0
+    assert resumed[0].schema == written.schema
+    assert sorted(resumed[0].collect()) == want
+
+
 def test_is_complete_reads_spark_written_lineage(spark, work_dir):
     """Lineage dirs written by Spark (several part files beside _SUCCESS and
     .crc files) still resume; a dir holding only an unpublished temp file
