@@ -11,7 +11,8 @@ With parquet, the bookkeeping costs no Spark job, like the reference's one
 status-row write: the lineage rows come from the parquet footers of the
 files the stage's write produced, are written as one small parquet file by
 the driver, and completion is read from that file on the driver. A
-checkpointed stage then costs one Spark job, its write.
+checkpointed stage then costs one Spark job, its write, and a resumed one
+costs none: its schema comes from a data file's footer.
 
 All table writes and reads go through one chokepoint pair (`_write_table` /
 `_read_table`) selected by `table_format`:

@@ -49,6 +49,5 @@ def install() -> None:
             reload(self)
             self._archive_signature = signature
 
-    invalidate_caches.__doc__ = reload.__doc__
     invalidate_caches._reads_on_change = True
     cls.invalidate_caches = invalidate_caches
