@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 at a given SF against its oracle_sql() in DuckDB and compare row count,
-column names, and order-insensitive values.
+column names, and order-insensitive values. A query with no oracle passes if
+it runs, and kg_triples_pr only if its precision and recall are >= 0.95.
 
 Usage: python tools/check_entry.py [sf_dir] [query ...]
 """
@@ -17,6 +18,7 @@ sys.path.insert(0, ".")
 import __spark_entry__ as entrymod  # noqa: E402
 from llm_review_aggregation_spark.session import get_spark  # noqa: E402
 
+PR_GATE = 0.95  # north rule: triple precision and recall
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -58,7 +60,14 @@ def main():
             failures += 1
             continue
         if name not in oq:
-            print(f"{name}: rows-only ({len(srows)} rows) OK")
+            # kg_triples_pr carries the triple P/R gate as data
+            low = [r for r in (dict(zip(scols, r)) for r in srows)
+                   if min(r.get("precision", 1.0), r.get("recall", 1.0)) < PR_GATE]
+            if low:
+                print(f"{name}: P/R BELOW {PR_GATE} {low}")
+                failures += 1
+            else:
+                print(f"{name}: rows-only ({len(srows)} rows) OK")
             continue
         try:
             cur = con.execute(oq[name])
