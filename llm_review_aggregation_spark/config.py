@@ -53,9 +53,7 @@ class PipelineConfig:
     # root concept; None -> most frequent candidate term
     root_name: str | None = None
 
-    # scale knobs
-    shuffle_partitions: int = 32
-    # when the candidate dictionary outgrows driver-exact clustering,
+    # scale knob: when the candidate dictionary outgrows driver-exact clustering,
     # switch to distributed label propagation (operators/canonicalize.py)
     max_driver_cluster_terms: int = 512
 

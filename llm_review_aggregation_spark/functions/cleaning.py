@@ -15,6 +15,11 @@ from pyspark.sql.types import StringType
 from llm_review_aggregation_spark import textproc as tp
 
 
+# url -> group_id: the first path segment. One pattern for the JVM
+# (regexp_extract) and Python (segment_pages) sides.
+GROUP_ID_RE = r"^[a-z]+://[^/]+/([^/]+)/"
+
+
 @pandas_udf(StringType())
 def clean_text_udf(html: pd.Series) -> pd.Series:
     return html.map(tp.clean_text)
@@ -27,7 +32,7 @@ def extract_doc_groups(pages: DataFrame) -> DataFrame:
     the clean_text pass in just to count documents per group."""
     return pages.select(
         F.col("url"),
-        F.regexp_extract("url", r"^[a-z]+://[^/]+/([^/]+)/", 1).alias("group_id"),
+        F.regexp_extract("url", GROUP_ID_RE, 1).alias("group_id"),
     )
 
 
@@ -42,7 +47,7 @@ def extract_docs(pages: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFram
     projection explicitly."""
     return pages.select(
         F.col("url"),
-        F.regexp_extract("url", r"^[a-z]+://[^/]+/([^/]+)/", 1).alias("group_id"),
+        F.regexp_extract("url", GROUP_ID_RE, 1).alias("group_id"),
         clean_text_udf(F.col("html")).alias("text"),
         *[F.col(c) for c in carry_cols],
     )

@@ -1,5 +1,5 @@
-"""E3/E4/E6/E7 mining — phrase vocabulary, noun-term candidates, mention
-instances, glossary matches.
+"""E3/E4/E6 mining — phrase vocabulary, noun-term candidates, mention
+instances.
 
 Scale notes (the design constraints these functions satisfy):
 - Phrase-vocabulary discovery (T3) is a *corpus-global* aggregation: two
@@ -9,9 +9,12 @@ Scale notes (the design constraints these functions satisfy):
   so skewed head tokens cost one combiner row per batch, not a hot
   reducer. Only the *scored phrase table* (above-threshold pairs, bounded
   by `max_phrase_vocab`) is collected and broadcast — never counts.
-- Mention mining (T7/T8/T9) joins every sentence against a dictionary,
-  fused with its scorer into one mapInPandas (mine_and_score_*) so the
-  instance table crosses the Arrow boundary once.
+- Mention mining (T7/T8) joins every sentence against a dictionary in one
+  mapInPandas per use: the pipeline's kernels (mine_and_score_*) score the
+  instances in the same Python pass, so the instance table never crosses
+  the Arrow boundary; training's miners (mine_*_instances) return it. All
+  four run the same per-batch loop (`_mine_batch`). (T6/T9, the opinion
+  phrases, are fused the same way in operators/argumentation.py.)
   The dictionary is <= top-k candidates (100) here, so it is a broadcast
   into the UDF closure — the degenerate-but-optimal case of the
   MinHash-LSH blocking + salted join the north star prescribes for large
@@ -20,7 +23,7 @@ Scale notes (the design constraints these functions satisfy):
 Reference behavior being restated: ontology_bert/phrase_tokenizer.py:29-35
 (bigram->trigram Phrases), helpers.py:160-264 (POS n-grams + noun terms),
 helpers.py:10-157 (entity instances), helpers.py:267-420 (relation
-instances), arg_framework/review.py:138-171 (glossary matching).
+instances).
 """
 
 from __future__ import annotations
@@ -181,242 +184,128 @@ def top_candidates(term_counts: DataFrame, n: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# T7: entity-instance mining
+# T7/T8: mention-instance mining
 # ---------------------------------------------------------------------------
 
-_ENTITY_SCHEMA = "url string, group_id string, sent_id int, masked_tokens array<string>, entity_idx int, entity string"
+_IDS = ["url", "group_id", "sent_id"]
+_ENTITY_COLS = ["masked_tokens", "entity_idx", "entity"]
+_REL_COLS = ["masked_tokens", "fst_idx", "snd_idx", "fst_concept", "snd_concept"]
 
 
-def mine_entity_instances(sentences: DataFrame, entities: list[str]) -> DataFrame:
-    """sentences x broadcast(candidate terms) -> entity instances.
+def _entity_finder(entities: list[str]):
+    """T7 for one token list -> (masked_tokens, entity_idx, entity) or None.
 
     `entities` must be in candidate rank order (count desc, term asc) —
     match priority follows it, as in the reference (helpers.py:138-149).
-    """
+    The mention index is built once, on the driver, and ships in the
+    closure."""
     ent_tokens = [(e, tuple(e.split(" "))) for e in entities]
+    index = tp.build_mention_index(ent_tokens)
+    return lambda toks: tp.mine_entity_instance(toks, ent_tokens, index=index)
+
+
+def _relation_finder(concepts: list[str], syn_dict: dict[str, list[str]]):
+    """T8 for one token list -> (masked_tokens, fst_idx, snd_idx,
+    fst_concept, snd_concept) or None."""
+    syn_tokens = {c: [tuple(s.split(" ")) for s in syns] for c, syns in syn_dict.items()}
+    index = tp.build_relation_index(concepts, syn_tokens)
+
+    def find(toks):
+        r = tp.mine_relation_instance(toks, concepts, syn_tokens, index=index)
+        if r is not None:
+            masked, (i1, i2), (c1, c2) = r
+            return masked, i1, i2, c1, c2
+        return None
+
+    return find
+
+
+def _mine_batch(tokens: pd.Series, find, columns: list[str]) -> pd.DataFrame:
+    """One Arrow batch's `tokens` -> its instance frame. A sentence yields
+    at most one instance, so the frame is indexed by the label of the
+    sentence row it came from."""
+    rows, at = [], []
+    for i, toks in tokens.items():
+        r = find(list(toks))
+        if r is not None:
+            rows.append(r)
+            at.append(i)
+    return pd.DataFrame(rows, index=at, columns=columns)
+
+
+def _map_instances(sentences: DataFrame, keep: list[str], find, columns: list[str], emit, schema: str):
+    """The one mining loop: `keep` + `tokens` cross into Python, each batch
+    is mined by `_mine_batch`, and `emit(batch, instances)` builds what
+    crosses back. mapInPandas is a column-pruning barrier for Catalyst, so
+    each caller names the columns it needs on both sides."""
     backend = tp.current_backend()
 
     def gen(batches):
         tp.install_backend(backend)
-        ent_index = tp.build_mention_index(ent_tokens)
         for pdf in batches:
-            rows = []
-            for url, gid, sid, toks in zip(pdf["url"], pdf["group_id"], pdf["sent_id"], pdf["tokens"]):
-                r = tp.mine_entity_instance(list(toks), ent_tokens, index=ent_index)
-                if r is not None:
-                    masked, idx, ent = r
-                    rows.append((url, gid, sid, masked, idx, ent))
-            yield pd.DataFrame(
-                rows, columns=["url", "group_id", "sent_id", "masked_tokens", "entity_idx", "entity"]
-            )
+            yield emit(pdf, _mine_batch(pdf["tokens"], find, columns))
 
-    return sentences.select("url", "group_id", "sent_id", "tokens").mapInPandas(gen, _ENTITY_SCHEMA)
+    return sentences.select(*keep, "tokens").mapInPandas(gen, schema)
 
 
-def mine_and_score_entities(
-    sentences: DataFrame, entities: list[str], scorer, lean: bool = False
-) -> DataFrame:
-    """T7 + M1 fused into ONE mapInPandas: instances are mined and scored in
-    the same Python pass, so the instance table crosses the Arrow boundary
-    once (the unfused mine -> score chain pays a round trip per operator).
-    Same rows as score_entity_instances(mine_entity_instances(...)).
+def _with_ids(pdf: pd.DataFrame, inst: pd.DataFrame) -> pd.DataFrame:
+    return pdf.loc[inst.index, _IDS].join(inst)
 
-    ``lean=True`` is the pipeline's aggregate feed: mapInPandas is a column-
-    pruning barrier for Catalyst, so the Arrow transfer is pruned by hand —
-    only `tokens` crosses into Python and only (entity, prob) crosses back
-    (the downstream mean-prob groupBy needs nothing else). `masked_tokens`
-    (the whole sentence re-serialized per instance) and the id columns never
-    leave the Python worker; measured, this is most of the stage's Arrow
-    bytes."""
-    import pandas as pd
 
-    from llm_review_aggregation_spark import textproc as _tp
-
-    ent_tokens = [(e, tuple(e.split(" "))) for e in entities]
-    backend = _tp.current_backend()
-    cols = ["url", "group_id", "sent_id", "masked_tokens", "entity_idx", "entity"]
-
-    if lean:
-        def gen_lean(batches):
-            _tp.install_backend(backend)
-            ent_index = _tp.build_mention_index(ent_tokens)
-            for pdf in batches:
-                rows = []
-                for toks in pdf["tokens"]:
-                    r = _tp.mine_entity_instance(list(toks), ent_tokens, index=ent_index)
-                    if r is not None:
-                        masked, idx, ent = r
-                        rows.append((masked, idx, ent))
-                idf = pd.DataFrame(rows, columns=["masked_tokens", "entity_idx", "entity"])
-                idf["prob"] = scorer.score_entities(idf) if len(idf) else pd.Series(dtype="float64")
-                yield idf[["entity", "prob"]]
-
-        return sentences.select("tokens").mapInPandas(gen_lean, "entity string, prob double")
-
-    def gen(batches):
-        _tp.install_backend(backend)
-        ent_index = _tp.build_mention_index(ent_tokens)
-        for pdf in batches:
-            rows = []
-            for url, gid, sid, toks in zip(pdf["url"], pdf["group_id"], pdf["sent_id"], pdf["tokens"]):
-                r = _tp.mine_entity_instance(list(toks), ent_tokens, index=ent_index)
-                if r is not None:
-                    masked, idx, ent = r
-                    rows.append((url, gid, sid, masked, idx, ent))
-            idf = pd.DataFrame(rows, columns=cols)
-            idf["prob"] = scorer.score_entities(idf) if len(idf) else pd.Series(dtype="float64")
-            yield idf
-
-    return sentences.select("url", "group_id", "sent_id", "tokens").mapInPandas(
-        gen, _ENTITY_SCHEMA + ", prob double"
+def mine_entity_instances(sentences: DataFrame, entities: list[str]) -> DataFrame:
+    """sentences x broadcast(candidate terms, rank order) -> entity
+    instances (url, group_id, sent_id, masked_tokens, entity_idx, entity):
+    the training set's distant-supervision input."""
+    return _map_instances(
+        sentences, _IDS, _entity_finder(entities), _ENTITY_COLS, _with_ids,
+        "url string, group_id string, sent_id int, masked_tokens array<string>, "
+        "entity_idx int, entity string",
     )
 
 
-# ---------------------------------------------------------------------------
-# T8: relation-instance mining
-# ---------------------------------------------------------------------------
+def mine_and_score_entities(sentences: DataFrame, entities: list[str], scorer) -> DataFrame:
+    """T7 + M1 in ONE mapInPandas, the pipeline's aspect feed: only `tokens`
+    crosses into Python and only (entity, prob) crosses back — the
+    downstream mean-prob groupBy needs nothing else. `masked_tokens` (the
+    whole sentence re-serialized per instance) never leaves the worker."""
 
-_REL_SCHEMA = (
-    "url string, group_id string, sent_id int, masked_tokens array<string>, "
-    "fst_idx int, snd_idx int, fst_concept string, snd_concept string"
-)
+    def emit(pdf, inst):
+        prob = scorer.score_entities(inst) if len(inst) else pd.Series(dtype="float64")
+        return inst[["entity"]].assign(prob=prob.to_numpy())
+
+    return _map_instances(
+        sentences, [], _entity_finder(entities), _ENTITY_COLS, emit, "entity string, prob double"
+    )
 
 
 def mine_relation_instances(sentences: DataFrame, concepts: list[str], syn_dict: dict[str, list[str]]) -> DataFrame:
-    syn_tokens = {c: [tuple(s.split(" ")) for s in syns] for c, syns in syn_dict.items()}
-    backend = tp.current_backend()
-
-    def gen(batches):
-        tp.install_backend(backend)
-        idx = tp.build_relation_index(concepts, syn_tokens)
-        for pdf in batches:
-            rows = []
-            for url, gid, sid, toks in zip(pdf["url"], pdf["group_id"], pdf["sent_id"], pdf["tokens"]):
-                r = tp.mine_relation_instance(list(toks), concepts, syn_tokens, index=idx)
-                if r is not None:
-                    masked, (i1, i2), (c1, c2) = r
-                    rows.append((url, gid, sid, masked, i1, i2, c1, c2))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url",
-                    "group_id",
-                    "sent_id",
-                    "masked_tokens",
-                    "fst_idx",
-                    "snd_idx",
-                    "fst_concept",
-                    "snd_concept",
-                ],
-            )
-
-    return sentences.select("url", "group_id", "sent_id", "tokens").mapInPandas(gen, _REL_SCHEMA)
-
-
-def mine_and_score_relations(
-    sentences: DataFrame, concepts: list[str], syn_dict: dict[str, list[str]], scorer,
-    lean: bool = False,
-) -> DataFrame:
-    """T8 + M2 fused into ONE mapInPandas (same rationale as
-    mine_and_score_entities): instances mined and direction-scored in one
-    Python pass. Same rows as score_relation_instances(mine_relation_instances(...)).
-
-    ``lean=True``: hand-pruned Arrow transfer for the pipeline's meronym
-    aggregate — `tokens` in, (fst_concept, snd_concept, forward_score,
-    backward_score) out; ids and masked_tokens stay inside the worker."""
-    syn_tokens = {c: [tuple(s.split(" ")) for s in syns] for c, syns in syn_dict.items()}
-    backend = tp.current_backend()
-    cols = ["url", "group_id", "sent_id", "masked_tokens", "fst_idx", "snd_idx", "fst_concept", "snd_concept"]
-
-    if lean:
-        lean_cols = ["masked_tokens", "fst_idx", "snd_idx", "fst_concept", "snd_concept"]
-        out_cols = ["fst_concept", "snd_concept", "forward_score", "backward_score"]
-
-        def gen_lean(batches):
-            tp.install_backend(backend)
-            idx = tp.build_relation_index(concepts, syn_tokens)
-            for pdf in batches:
-                rows = []
-                for toks in pdf["tokens"]:
-                    r = tp.mine_relation_instance(list(toks), concepts, syn_tokens, index=idx)
-                    if r is not None:
-                        masked, (i1, i2), (c1, c2) = r
-                        rows.append((masked, i1, i2, c1, c2))
-                idf = pd.DataFrame(rows, columns=lean_cols)
-                if len(idf):
-                    scores = scorer.score_relations(idf)
-                    idf["forward_score"] = scores["forward_score"]
-                    idf["backward_score"] = scores["backward_score"]
-                else:
-                    idf["forward_score"] = pd.Series(dtype="float64")
-                    idf["backward_score"] = pd.Series(dtype="float64")
-                yield idf[out_cols]
-
-        return sentences.select("tokens").mapInPandas(
-            gen_lean,
-            "fst_concept string, snd_concept string, forward_score double, backward_score double",
-        )
-
-    def gen(batches):
-        tp.install_backend(backend)
-        idx = tp.build_relation_index(concepts, syn_tokens)
-        for pdf in batches:
-            rows = []
-            for url, gid, sid, toks in zip(pdf["url"], pdf["group_id"], pdf["sent_id"], pdf["tokens"]):
-                r = tp.mine_relation_instance(list(toks), concepts, syn_tokens, index=idx)
-                if r is not None:
-                    masked, (i1, i2), (c1, c2) = r
-                    rows.append((url, gid, sid, masked, i1, i2, c1, c2))
-            idf = pd.DataFrame(rows, columns=cols)
-            if len(idf):
-                scores = scorer.score_relations(idf)
-                idf["forward_score"] = scores["forward_score"]
-                idf["backward_score"] = scores["backward_score"]
-            else:
-                idf["forward_score"] = pd.Series(dtype="float64")
-                idf["backward_score"] = pd.Series(dtype="float64")
-            yield idf
-
-    return sentences.select("url", "group_id", "sent_id", "tokens").mapInPandas(
-        gen, _REL_SCHEMA + ", forward_score double, backward_score double"
+    """sentences x broadcast(synset glossary) -> relation instances (url,
+    group_id, sent_id, masked_tokens, fst_idx, snd_idx, fst_concept,
+    snd_concept): the training set's distant-supervision input."""
+    return _map_instances(
+        sentences, _IDS, _relation_finder(concepts, syn_dict), _REL_COLS, _with_ids,
+        "url string, group_id string, sent_id int, masked_tokens array<string>, "
+        "fst_idx int, snd_idx int, fst_concept string, snd_concept string",
     )
 
 
-# ---------------------------------------------------------------------------
-# T9: glossary matching (argumentation)
-# ---------------------------------------------------------------------------
-
-_GLOSS_SCHEMA = (
-    "url string, group_id string, phrase_id string, phrase_ord long, phrase string, "
-    "node string, form string, start int, end int"
-)
-
-
-def match_glossary(
-    phrases: DataFrame,
-    nodes_postorder: list[str],
-    parents: dict[str, str | None],
-    glossary: dict[str, list[str]],
+def mine_and_score_relations(
+    sentences: DataFrame, concepts: list[str], syn_dict: dict[str, list[str]], scorer
 ) -> DataFrame:
-    """phrases x broadcast(ontology glossary) -> matched (phrase, node) spans.
+    """T8 + M2 in ONE mapInPandas, the pipeline's meronym feed: `tokens` in,
+    (fst_concept, snd_concept, forward_score, backward_score) out."""
 
-    `phrase_ord` (derived from sent/phrase position) pins within-review
-    tie-breaking downstream (the reference relies on Python list order)."""
-    gloss_tokens = {n: [s.split(" ") for s in syns] for n, syns in glossary.items()}
+    def emit(pdf, inst):
+        scores = (
+            scorer.score_relations(inst) if len(inst)
+            else pd.DataFrame(columns=["forward_score", "backward_score"], dtype="float64")
+        )
+        return inst[["fst_concept", "snd_concept"]].assign(
+            forward_score=scores["forward_score"].to_numpy(),
+            backward_score=scores["backward_score"].to_numpy(),
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for url, gid, pid, pord, phrase, toks in zip(
-                pdf["url"], pdf["group_id"], pdf["phrase_id"], pdf["phrase_ord"], pdf["phrase"], pdf["tokens"]
-            ):
-                for node, form, s, e in tp.match_glossary(list(toks), nodes_postorder, parents, gloss_tokens):
-                    rows.append((url, gid, pid, pord, phrase, node, form, s, e))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "group_id", "phrase_id", "phrase_ord", "phrase", "node", "form", "start", "end"],
-            )
-
-    return phrases.select("url", "group_id", "phrase_id", "phrase_ord", "phrase", "tokens").mapInPandas(
-        gen, _GLOSS_SCHEMA
+    return _map_instances(
+        sentences, [], _relation_finder(concepts, syn_dict), _REL_COLS, emit,
+        "fst_concept string, snd_concept string, forward_score double, backward_score double",
     )

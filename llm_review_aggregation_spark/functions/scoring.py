@@ -3,10 +3,12 @@
 The reference runs three BERT heads (entity prob, meronym-direction probs,
 targeted sentiment: entity_bert_net.py / rel_bert_net.py / tdbertnet.py).
 This engine treats each as a `Scorer`: a picklable object whose `score*`
-method maps one pandas batch -> numeric columns, applied via
-`DataFrame.mapInPandas` so Arrow batches stream through a single Python
-worker per partition (model weights, when a real backend is used, load once
-per worker — the iterator pattern keeps them warm across batches).
+method maps one pandas batch -> numeric columns, one value per row in row
+order. The fused mining kernels (functions/mining.py,
+operators/argumentation.py) call it inside their `mapInPandas` pass, so
+Arrow batches stream through a single Python worker per partition (model
+weights, when a real backend is used, load once per worker — the iterator
+pattern keeps them warm across batches).
 
 CI uses deterministic backends (FIXTURES.md §4):
 - Hash*Scorer  — pseudo-probabilities from md5 of the canonical input; shared
@@ -25,7 +27,6 @@ import re
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame
 
 
 def _h01(*parts: str) -> float:
@@ -61,19 +62,6 @@ class LexiconEntityScorer:
             base = 0.93 if e in self.aspect_terms else 0.12
             out.append(base + 0.04 * (_h01("entj", e, " ".join(t)) - 0.5))
         return pd.Series(out, index=pdf.index, dtype="float64")
-
-
-def score_entity_instances(instances: DataFrame, scorer) -> DataFrame:
-    """instances -> instances + prob column (Arrow-batched)."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in instances.schema.fields) + ", prob double"
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["prob"] = scorer.score_entities(pdf)
-            yield pdf
-
-    return instances.mapInPandas(gen, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -117,23 +105,6 @@ class LexiconRelationScorer:
         return pd.DataFrame({"forward_score": fwd, "backward_score": bwd}, index=pdf.index)
 
 
-def score_relation_instances(instances: DataFrame, scorer) -> DataFrame:
-    schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in instances.schema.fields)
-        + ", forward_score double, backward_score double"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            scores = scorer.score_relations(pdf)
-            pdf["forward_score"] = scores["forward_score"]
-            pdf["backward_score"] = scores["backward_score"]
-            yield pdf
-
-    return instances.mapInPandas(gen, schema)
-
-
 # ---------------------------------------------------------------------------
 # Sentiment scorer (M3): signed polarity value per (phrase, target span)
 # ---------------------------------------------------------------------------
@@ -172,18 +143,6 @@ class LexiconSentimentScorer:
             else:
                 out.append(0.6 * (2 * _h01("sentn", phrase or "", form or "") - 1))
         return pd.Series(out, index=pdf.index, dtype="float64")
-
-
-def score_sentiment_instances(matches: DataFrame, scorer) -> DataFrame:
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in matches.schema.fields) + ", sentiment double"
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["sentiment"] = scorer.score_sentiments(pdf)
-            yield pdf
-
-    return matches.mapInPandas(gen, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -1,33 +1,25 @@
-"""E2 — segment: docs -> sentences (+ argumentation phrases).
+"""E2 — segment: docs -> sentences.
 
 UDTF-style 1->N explode (reference T1/T2: ontology_bert/
-phrase_tokenizer.py:17-27, T6: arg_framework/review.py:43-66), expressed as
-one `mapInPandas` per segmentation: each input row yields its exploded
-sentence/phrase rows with tokens in the same Python pass — one Arrow
-round-trip, instead of a sentence-split UDF + posexplode + a second
+phrase_tokenizer.py:17-27), expressed as one `mapInPandas`: each input row
+yields its exploded sentence rows with tokens in the same Python pass — one
+Arrow round-trip, instead of a sentence-split UDF + posexplode + a second
 word-tokenize UDF (two Python stages and twice the Arrow traffic).
+Argumentation phrases (T6) are split inside E7's own fused kernel
+(operators/argumentation.py).
 """
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 from llm_review_aggregation_spark import textproc as tp
+from llm_review_aggregation_spark.functions.cleaning import GROUP_ID_RE
 
 _SENT_SCHEMA = "url string, group_id string, sent_id int, sentence string, tokens array<string>"
-
-_PHRASE_SCHEMA = (
-    "url string, group_id string, sent_id int, phrase_id string, phrase_ord long, "
-    "phrase string, tokens array<string>"
-)
-
-
-@pandas_udf(ArrayType(StringType()))
-def word_tokenize_udf(sentence: pd.Series) -> pd.Series:
-    return sentence.map(lambda s: tp.word_tokenize(s or ""))
 
 
 def segment_sentences(docs: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -74,10 +66,8 @@ def segment_pages(pages: DataFrame) -> DataFrame:
     the unfused chain. Used by the pipeline when no work_dir is given; with
     a work_dir the docs checkpoint already holds the cleaned text, so the
     unfused path reuses it instead of re-cleaning."""
-    import re as _re
-
     backend = tp.current_backend()
-    gid_re = _re.compile(r"^[a-z]+://[^/]+/([^/]+)/")
+    gid_re = re.compile(GROUP_ID_RE)
 
     def gen(batches):
         tp.install_backend(backend)
@@ -98,40 +88,3 @@ def segment_pages(pages: DataFrame) -> DataFrame:
             )
 
     return pages.select("url", "html").mapInPandas(gen, _SENT_SCHEMA)
-
-
-def segment_phrases(sentences: DataFrame, max_words: float) -> DataFrame:
-    """sentences -> phrases(url, group_id, sent_id, phrase_id, phrase, tokens).
-
-    The reference re-tokenizes raw review bodies for argumentation
-    (review.py:58-66); this engine reuses the sentence table — one upstream
-    scan instead of two — and splits on the same conjunction regex.
-    `phrase_id` is globally unique; `phrase_ord` pins within-review order.
-    """
-    backend = tp.current_backend()
-
-    def gen(batches):
-        tp.install_backend(backend)
-        for pdf in batches:
-            rows = []
-            for url, gid, sid, sentence in zip(
-                pdf["url"], pdf["group_id"], pdf["sent_id"], pdf["sentence"]
-            ):
-                for pos, phrase in enumerate(tp.split_phrases(sentence or "", max_words)):
-                    rows.append(
-                        (
-                            url,
-                            gid,
-                            int(sid),
-                            f"{url}#{sid}#{pos}",
-                            int(sid) * 100000 + pos,
-                            phrase,
-                            tp.word_tokenize(phrase),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "group_id", "sent_id", "phrase_id", "phrase_ord", "phrase", "tokens"],
-            )
-
-    return sentences.select("url", "group_id", "sent_id", "sentence").mapInPandas(gen, _PHRASE_SCHEMA)

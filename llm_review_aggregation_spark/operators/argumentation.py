@@ -8,7 +8,7 @@ the QBAF/DF-QuAD computation for ALL the groups of a partition in one
 vectorized `mapInPandas` pass keyed by group — one shuffle on group_id:
 
     sentences --T6--> phrases --T9 glossary match--> (phrase, node) spans
-      --M3 scorer--> sentiments                      [distributed, 1 pass]
+      --M3 scorer--> sentiments    [distributed, 1 fused mapInPandas pass]
       U docs.groupBy(group_id).count()  --repartition(group_id)-->
         per partition, every op keyed by group (pandas/numpy):
           A8 phrase/review votes -> A9 ancestor augmentation ->
@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_review_aggregation_spark import textproc as tp
-from llm_review_aggregation_spark.functions import mining, scoring, tokenize  # noqa: F401 (unfused building blocks kept public)
 
 _OUT_SCHEMA = (
     "group_id string, aspect string, polarity boolean, strength double, "
@@ -206,15 +205,14 @@ def _fused_phrase_scores(
     scorer,
     max_words: float,
 ) -> DataFrame:
-    """T6 + T9 + M3 in ONE mapInPandas: phrase split, glossary match and
-    sentiment scoring chained inside a single Python pass, so the phrase
-    table crosses the Arrow boundary once instead of three times (the
-    unfused segment_phrases -> match_glossary -> score_sentiment_instances
-    chain pays a serialize/deserialize round trip per operator). Identical
-    row semantics — the scorer still sees one pandas batch of matched
-    (phrase, form, start, end) rows."""
-    import pandas as pd
-
+    """T6 + T9 + M3 in ONE mapInPandas: phrase split (textproc.split_phrases),
+    glossary match (textproc.match_glossary) and sentiment scoring chained
+    inside a single Python pass, so neither the phrase table nor the match
+    table crosses the Arrow boundary — a chain of three Python operators
+    would pay a serialize/deserialize round trip per operator. The scorer
+    sees one pandas batch of matched (phrase, form, start, end) rows.
+    `phrase_ord` (sentence then phrase position) pins within-review
+    tie-breaking downstream (the reference relies on Python list order)."""
     backend = tp.current_backend()
     gloss_tokens = {n: [s.split(" ") for s in syns] for n, syns in glossary.items()}
     cols = ["group_id", "url", "phrase_id", "phrase_ord", "phrase", "node", "form", "start", "end"]

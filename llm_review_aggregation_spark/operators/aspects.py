@@ -4,7 +4,8 @@ Dataflow (reference: ontology_bert/aspects/manager.py:59-73,
 bert_entity_extractor.py:28-60):
 
     sentences x broadcast(top-k candidates)  --T7-->  entity instances
-      (mined + M1-scored in one fused mapInPandas pass)
+      (mined + M1-scored in one fused mapInPandas pass; only (entity,
+      prob) leaves the Python worker)
       --groupBy(entity).avg(prob)-->  mean prob per candidate
       --filter(prob >= 0.65) join collected candidates-->  aspects(term, count, prob)
 
@@ -19,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from llm_review_aggregation_spark.functions import mining, scoring  # noqa: F401 (unfused path kept public)
+from llm_review_aggregation_spark.functions import mining
 
 
 def extract_aspects(
@@ -34,7 +35,7 @@ def extract_aspects(
     cand_rows = cand.orderBy(F.desc("count"), F.asc("term")).collect()
     entities = [r["term"] for r in cand_rows]
 
-    scored = mining.mine_and_score_entities(sentences, entities, entity_scorer, lean=True)
+    scored = mining.mine_and_score_entities(sentences, entities, entity_scorer)
     mean_probs = scored.groupBy("entity").agg(F.avg("prob").alias("prob"))
 
     # join the collected rows, not `candidates`: a lazy candidates plan would

@@ -4,7 +4,9 @@
 Dataflow (reference: ontology_bert/relations/*, bert_rel_extractor.py:46-68):
 
     sentences x broadcast(synset glossary)  --T8-->  relation instances
-      --M2 scorer UDF-->  (forward_score, backward_score) per instance
+      --M2 scorer-->  (forward_score, backward_score) per instance
+      (mined + M2-scored in one fused mapInPandas pass; only the concept
+      pair and its two scores leave the Python worker)
       --flatten: 2 evidence rows per instance-->
           (child=snd, parent=fst, score=forward)   # forward = P(fst hasFeature snd)
           (child=fst, parent=snd, score=backward)
@@ -23,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from llm_review_aggregation_spark.functions import mining, scoring  # noqa: F401 (unfused path kept public)
+from llm_review_aggregation_spark.functions import mining
 from llm_review_aggregation_spark.operators import tree as tree_ops
 
 
@@ -34,7 +36,7 @@ def accumulate_meronym_scores(
     relation_scorer,
 ) -> DataFrame:
     """Returns (child, parent, score_sum, pair_count)."""
-    scored = mining.mine_and_score_relations(sentences, concepts, synsets, relation_scorer, lean=True)
+    scored = mining.mine_and_score_relations(sentences, concepts, synsets, relation_scorer)
     evidence = scored.select(
         F.explode(
             F.array(

@@ -78,7 +78,7 @@ def run_pipeline(
     self-joins, triples x entity-attribute joins — then plan WITHOUT an
     Exchange on the triples side (asserted in tests/test_bucketing.py).
     One shuffle at materialize time buys shuffle-free repeated reads; the
-    reference's analog is the Postgres index its join queries lean on
+    reference's analog is the Postgres index its join queries rely on
     (db/manager.py:321-326)."""
     bucket_spec = {"triples": ("subj", bucket_triples)} if bucket_triples else None
     store = (

@@ -438,11 +438,6 @@ def noun_terms(tokens: list[str], ngrams: list[str], tags: list[str] | None = No
 # --------------------------------------------------------------------------
 
 
-def _seq_match_at(tokens: list[str], i: int, ent_tokens: tuple[str, ...]) -> bool:
-    L = len(ent_tokens)
-    return tuple(tokens[i : i + L]) == ent_tokens
-
-
 def build_mention_index(entries):
     """First-token index for the mining hot loops: [(payload, seq_tokens)]
     -> {first_token: [(payload, seq_as_list, len)]} preserving the input

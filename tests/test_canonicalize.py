@@ -1,6 +1,7 @@
 """Scale-path canonicalization: distributed label propagation + MinHash-LSH
 blocking (operators/canonicalize.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from llm_review_aggregation_spark.operators import canonicalize as canon
@@ -55,3 +56,25 @@ def test_minhash_salt_column(spark):
     assert "salt" in blocks.columns
     n_salts = blocks.select("salt").distinct().count()
     assert 1 <= n_salts <= 4
+
+
+@pytest.mark.parametrize("salt_mod", [2, 4])
+def test_sparse_cosine_pairs_salted_join_is_exact(spark, salt_mod):
+    """One hot bucket every term shares, plus a few private and partly
+    shared ones. Weights are multiples of 1/4, so every dot product is an
+    exact float sum whatever order the join's partitions add it in."""
+    from llm_review_aggregation_spark.functions import embeddings
+
+    terms = [f"t{i:02d}" for i in range(24)]
+    rows = [(t, "hot", 0.25 * (1 + i % 5)) for i, t in enumerate(terms)]
+    rows += [(t, f"b{i % 3}", 0.25 * (1 + i % 4)) for i, t in enumerate(terms) if i % 2]
+    rows += [(t, f"own{i}", 1.0) for i, t in enumerate(terms) if i % 3 == 0]
+    w = spark.createDataFrame(rows, "term string, bucket string, w double")
+
+    def pairs(m):
+        out = embeddings.sparse_cosine_pairs(w, 0.5, salt_mod=m).collect()
+        return sorted((r["src"], r["dst"], r["cos"]) for r in out)
+
+    plain = pairs(None)
+    assert len(plain) > 50
+    assert pairs(salt_mod) == plain

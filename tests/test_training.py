@@ -1,9 +1,11 @@
 """Training-set construction (distributed, torch-free) + fit gating."""
 
+from collections import Counter
+
 import pytest
 
 from llm_review_aggregation_spark import synth
-from llm_review_aggregation_spark.functions import cleaning, tokenize, training
+from llm_review_aggregation_spark.functions import cleaning, mining, scoring, tokenize, training
 
 
 @pytest.fixture(scope="module")
@@ -90,6 +92,29 @@ def test_relation_training_set_deterministic(spark, sentences):
     a = training.build_relation_training_set(sentences, concepts, syn, dict(synth.MERONYMS))
     b = training.build_relation_training_set(sentences, concepts, syn, dict(synth.MERONYMS))
     assert key(a) == key(b)
+
+
+def test_pipeline_kernels_match_training_miners_scored_on_the_driver(spark, sentences):
+    """The pipeline's fused mine+score kernels and training's instance
+    miners run one mining loop: scoring training's rows on the driver with
+    the same scorer gives the kernels' rows, as multisets."""
+    ent_scorer, rel_scorer, _ = scoring.make_scorers("lexicon", {})
+    candidates = sorted(synth.ASPECT_TERMS) + ["thing", "stuff"]
+    inst = mining.mine_entity_instances(sentences, candidates).toPandas()
+    assert len(inst) and inst["entity"].isin(synth.ASPECT_TERMS).any()
+    expect = Counter(zip(inst["entity"], ent_scorer.score_entities(inst)))
+    got = mining.mine_and_score_entities(sentences, candidates, ent_scorer).collect()
+    assert Counter((r["entity"], r["prob"]) for r in got) == expect
+
+    syn = {c: [c] + list(s) for c, s in synth.SYNONYMS.items()}
+    concepts = sorted(syn)
+    inst = mining.mine_relation_instances(sentences, concepts, syn).toPandas()
+    assert len(inst)
+    scores = rel_scorer.score_relations(inst)
+    expect = Counter(zip(inst["fst_concept"], inst["snd_concept"],
+                         scores["forward_score"], scores["backward_score"]))
+    got = mining.mine_and_score_relations(sentences, concepts, syn, rel_scorer).collect()
+    assert Counter(tuple(r) for r in got) == expect
 
 
 def test_sentiment_training_set_polarity_classes(spark):
