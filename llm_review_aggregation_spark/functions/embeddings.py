@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_review_aggregation_spark import textproc as tp
+from llm_review_aggregation_spark.session import local_table
 
 
 def _bucket(word: str, dim: int) -> int:
@@ -397,7 +398,7 @@ def build_fasttext_similarity_model(
                 ).otherwise(F.array().cast("array<string>"))
             )
         grams_col = F.array_distinct(F.flatten(F.array(*per_n)))
-        needed_df = vec_tbl.sparkSession.createDataFrame([(g,) for g in needed], "gram string")
+        needed_df = local_table(vec_tbl.sparkSession, [(g,) for g in needed], "gram string")
         ng = (
             vec_tbl.select(F.explode(grams_col).alias("gram"), vector_to_array("vector").alias("arr"))
             .join(F.broadcast(needed_df), "gram")
@@ -461,7 +462,7 @@ def _build_fasttext_joint(
         }
     )
     spark = sentences.sparkSession
-    wanted_df = spark.createDataFrame([(w,) for w in wanted], "word string")
+    wanted_df = local_table(spark, [(w,) for w in wanted], "word string")
     rows = model.getVectors().join(F.broadcast(wanted_df), "word").collect()
     vec_of = {r["word"]: np.array(r["vector"].toArray()) for r in rows}
     in_vocab = [k for k in keys if k in vec_of]

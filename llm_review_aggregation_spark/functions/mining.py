@@ -7,8 +7,10 @@ Scale notes (the design constraints these functions satisfy):
   the counting kernel — the merged corpus is never materialized), each
   pre-aggregated per Arrow batch then reduced by one distributed groupBy,
   so skewed head tokens cost one combiner row per batch, not a hot
-  reducer. Only the *scored phrase table* (above-threshold pairs, bounded
-  by `max_phrase_vocab`) is collected and broadcast — never counts.
+  reducer. Each pass is ONE Spark action: the driver receives only the
+  count rows that can score (every token and adjacent pair seen more than
+  `min_count` times; every row when `threshold < 0`) plus the observed
+  vocabulary size, and scores, ranks and cuts the phrase table itself.
 - Mention mining (T7/T8) joins every sentence against a dictionary in one
   mapInPandas per use: the pipeline's kernels (mine_and_score_*) score the
   instances in the same Python pass, so the instance table never crosses
@@ -29,7 +31,7 @@ instances).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
@@ -51,7 +53,8 @@ def _scored_pairs(
 ) -> list[tuple[str, str]]:
     """One gensim-Phrases pass over a DataFrame with a `tokens` column:
     returns adjacent pairs whose score
-    (c_ab - min_count) * vocab_size / (c_a * c_b) > threshold.
+    (c_ab - min_count) * vocab_size / (c_a * c_b) > threshold, the
+    `max_vocab` best in (score desc, a, b) order.
 
     vocab_size counts distinct unigrams + distinct bigrams, matching the
     reference library's vocabulary bookkeeping.
@@ -62,6 +65,15 @@ def _scored_pairs(
     are one fused Python pass, pre-aggregated per Arrow batch (bounded
     vocabulary keeps the per-batch dict small), then reduced by one
     distributed groupBy. Unigrams travel as (a, b=NULL) rows.
+
+    The pass is one Spark action. vocab_size, the number of reduced count
+    rows (one per distinct unigram or bigram), is observed as they stream
+    by. When threshold >= 0 a pair can only score if
+    c_ab > min_count, and c_a, c_b >= c_ab, so only unigram and bigram rows
+    with c > min_count reach the driver; when threshold < 0 every row does.
+    The driver scores them with numpy in Catalyst's operation order (the
+    long difference, then double arithmetic), so a score is bit-identical
+    to the same expression evaluated in Spark.
     """
     mp = set(merge_pairs) if merge_pairs else None
 
@@ -80,43 +92,32 @@ def _scored_pairs(
                 [(a, b, c) for (a, b), c in out.items()], columns=["a", "b", "c"]
             )
 
+    vocab = Observation()
     counts = (
         tok_df.select("tokens")
         .mapInPandas(gen, "a string, b string, c long")
         .groupBy("a", "b")
         .agg(F.sum("c").alias("c"))
-        .cache()
+        .observe(vocab, F.count(F.lit(1)).alias("vocab_size"))
     )
-    uni = counts.filter(F.col("b").isNull()).select(F.col("a").alias("t"), F.col("c"))
-    bi = counts.filter(F.col("b").isNotNull()).select("a", "b", F.col("c").alias("c_ab"))
-    # vocab_size (distinct unigrams + distinct bigrams) folded into the same
-    # job as the scoring join — one action total, no separate count() jobs
-    vocab = F.broadcast(
-        counts.agg(
-            F.sum(F.when(F.col("b").isNull(), 1).otherwise(0)).alias("n_uni"),
-            F.sum(F.when(F.col("b").isNotNull(), 1).otherwise(0)).alias("n_bi"),
-        )
-    )
+    if threshold >= 0:
+        counts = counts.filter(F.col("c") > min_count)
+    rows = counts.toArrow().to_pandas()
+    vocab_size = vocab.get["vocab_size"]
 
-    ua = uni.select(F.col("t").alias("a"), F.col("c").alias("c_a"))
-    ub = uni.select(F.col("t").alias("b"), F.col("c").alias("c_b"))
-    scored = (
-        bi.join(F.broadcast(ua), "a")
-        .join(F.broadcast(ub), "b")
-        .crossJoin(vocab)
-        .withColumn(
-            "score",
-            (F.col("c_ab") - F.lit(min_count))
-            * (F.col("n_uni") + F.col("n_bi")).cast("double")
-            / (F.col("c_a") * F.col("c_b")),
-        )
-        .filter(F.col("score") > threshold)
-        .orderBy(F.desc("score"), "a", "b")
-        .limit(max_vocab)
+    is_bi = rows["b"].notna()
+    uni = rows.loc[~is_bi].set_index("a")["c"]
+    bi = rows.loc[is_bi]
+    c_ab = bi["c"].to_numpy()
+    c_a = bi["a"].map(uni).to_numpy()
+    c_b = bi["b"].map(uni).to_numpy()
+    scored = bi[["a", "b"]].assign(score=(c_ab - min_count) * float(vocab_size) / (c_a * c_b))
+    top = (
+        scored.loc[scored["score"] > threshold]
+        .sort_values(["score", "a", "b"], ascending=[False, True, True])
+        .head(max_vocab)
     )
-    pairs = [(r["a"], r["b"]) for r in scored.select("a", "b").collect()]
-    counts.unpersist()
-    return pairs
+    return list(zip(top["a"], top["b"]))
 
 
 def build_phrase_vocab(

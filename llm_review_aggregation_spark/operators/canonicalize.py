@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from llm_review_aggregation_spark.session import local_table
+
 
 def label_propagation(edges: DataFrame, max_rounds: int = 3) -> DataFrame:
     """edges(src string, dst string), undirected -> (node, component).
@@ -110,10 +112,10 @@ def cluster_synsets_scale(
         (grp[i], grp[i + 1]) for grp in by_lemma.values() for i in range(len(grp) - 1)
     ]
     if lemma_edges:
-        edges = edges.union(spark.createDataFrame(lemma_edges, "src string, dst string"))
+        edges = edges.union(local_table(spark, lemma_edges, "src string, dst string"))
 
     labels = label_propagation(edges, max_rounds=num_levels)
-    counts_df = spark.createDataFrame(list(counts.items()), "term string, count long")
+    counts_df = local_table(spark, list(counts.items()), "term string, count long")
     full = (
         counts_df.select(F.col("term").alias("node"))
         .join(labels, "node", "left")

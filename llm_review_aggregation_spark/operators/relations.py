@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from llm_review_aggregation_spark.functions import mining
 from llm_review_aggregation_spark.operators import tree as tree_ops
+from llm_review_aggregation_spark.session import local_table
 
 
 def accumulate_meronym_scores(
@@ -66,8 +67,9 @@ def build_ontology_edges(
     root_name: str,
 ) -> DataFrame:
     """Collect the tiny (child,parent) aggregate, normalize + build the tree
-    exactly (operators/tree.py), return the triples as a DataFrame
-    (subj=child, pred='partOf', obj=parent, score=normalized relatedness)."""
+    exactly (operators/tree.py), return the triples as a local table
+    (subj=child, pred='partOf', obj=parent, score=normalized relatedness):
+    reading it back costs no Spark job."""
     sums = {(r["child"], r["parent"]): float(r["score_sum"]) for r in meronym_scores.collect()}
     matrix, kept = tree_ops.normalize_relatedness(concepts, synset_counts, sums, root_name)
     edges = tree_ops.build_tree_edges(matrix, kept, root_name)
@@ -77,4 +79,4 @@ def build_ontology_edges(
     for child, parent in sorted(edges.items()):
         score = matrix[kidx[child]][kidx[parent]] if parent != child else 0.0
         rows.append((child, "partOf", parent, float(score)))
-    return spark.createDataFrame(rows, "subj string, pred string, obj string, score double")
+    return local_table(spark, rows, "subj string, pred string, obj string, score double")

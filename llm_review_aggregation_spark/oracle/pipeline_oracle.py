@@ -69,24 +69,25 @@ def sentences_from_docs(docs: list[dict]) -> list[dict]:
 
 
 def _scored_pairs_local(token_lists, min_count, threshold):
+    """{(a, b): score} for every adjacent pair scoring above `threshold`."""
     uni = Counter()
     bi = Counter()
     for toks in token_lists:
         uni.update(toks)
         bi.update(zip(toks, toks[1:]))
     vocab_size = len(uni) + len(bi)
-    return {
-        (a, b)
+    scores = {
+        (a, b): tp.phrase_score(c_ab, uni[a], uni[b], vocab_size, min_count)
         for (a, b), c_ab in bi.items()
-        if tp.phrase_score(c_ab, uni[a], uni[b], vocab_size, min_count) > threshold
     }
+    return {p: s for p, s in scores.items() if s > threshold}
 
 
 def phrase_vocab(sentences, min_count=1, threshold=4.0):
     toks = [s["tokens"] for s in sentences]
-    pairs1 = _scored_pairs_local(toks, min_count, threshold)
+    pairs1 = set(_scored_pairs_local(toks, min_count, threshold))
     merged = [tp.apply_phrases(t, pairs1) for t in toks]
-    return _scored_pairs_local(merged, min_count, threshold)
+    return set(_scored_pairs_local(merged, min_count, threshold))
 
 
 def candidates(sentences, pairs, n=100):

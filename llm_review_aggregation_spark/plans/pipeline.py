@@ -27,6 +27,7 @@ from llm_review_aggregation_spark.operators import argumentation, aspects as asp
 from llm_review_aggregation_spark.operators import concepts as concepts_ops
 from llm_review_aggregation_spark.operators import relations as relations_ops
 from llm_review_aggregation_spark.plans.lineage import EphemeralStore, StageStore
+from llm_review_aggregation_spark.session import local_table
 
 
 @dataclass
@@ -169,9 +170,10 @@ def run_pipeline(
     if root_name is None:
         # degenerate corpus (no aspects survived): emit empty, well-typed outputs
         empty = {
-            "synsets": spark.createDataFrame([], "concept string, member string, count long"),
-            "edges": spark.createDataFrame([], "subj string, pred string, obj string, score double"),
-            "arguments": spark.createDataFrame(
+            "synsets": local_table(spark, [], "concept string, member string, count long"),
+            "edges": local_table(spark, [], "subj string, pred string, obj string, score double"),
+            "arguments": local_table(
+                spark,
                 [],
                 "group_id string, aspect string, polarity boolean, strength double, "
                 "strongest_support_phrase string, strongest_attack_phrase string, "
@@ -197,7 +199,7 @@ def run_pipeline(
     synsets_rows = [(c, m, synset_counts[c]) for c, ms in synset_map.items() for m in ms]
     synsets_df = store.run_table(
         "synsets",
-        lambda: spark.createDataFrame(synsets_rows, "concept string, member string, count long"),
+        lambda: local_table(spark, synsets_rows, "concept string, member string, count long"),
         resume,
     )
 

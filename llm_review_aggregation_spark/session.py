@@ -4,13 +4,18 @@
 - Arrow on (every custom op is an Arrow-batched pandas UDF)
 - sane shuffle partition count for the local harness; on a real cluster
   AQE coalesces, and callers override via config or spark-submit --conf
+
+`local_table` is how the engine hands a driver-built table to Spark.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -43,3 +48,13 @@ def get_spark(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """`rows` (tuples in `schema`'s column order, a DDL string) as a local
+    relation: it plans as a `LocalTableScan`, so reading it submits no Spark
+    job and starts no Python worker. `createDataFrame` plans a list, and an
+    empty pandas frame, as a Python RDD (`Scan ExistingRDD`), which costs a
+    job on every read; an Arrow table, empty or not, stays local."""
+    pdf = pd.DataFrame(rows, columns=StructType.fromDDL(schema).names)
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)

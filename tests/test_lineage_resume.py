@@ -2,7 +2,6 @@
 
 import os
 import shutil
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -118,25 +117,12 @@ def test_footer_lineage_matches_spark_rollup_bucketed(spark, work_dir):
     assert sum(n for _, n in rows) == 200
 
 
-def _jobs_submitted(spark, fn):
-    """Number of Spark jobs `fn` submits, counted through its own job group."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker asynchronously
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_checkpoint_bookkeeping_job_budget(spark, work_dir):
+def test_checkpoint_bookkeeping_job_budget(spark, work_dir, jobs_submitted):
     """A fresh narrow stage costs one Spark job, its write: lineage comes
     from the footers, completion and the read-back schema need no job."""
     store = StageStore(spark, work_dir)
-    assert _jobs_submitted(spark, lambda: store.run_table("stage_j", lambda: spark.range(0, 100, 1, 4))) == 1
-    assert _jobs_submitted(spark, lambda: store.is_complete("stage_j")) == 0
+    assert jobs_submitted(lambda: store.run_table("stage_j", lambda: spark.range(0, 100, 1, 4))) == 1
+    assert jobs_submitted(lambda: store.is_complete("stage_j")) == 0
     assert store.is_complete("stage_j")
 
 
@@ -148,7 +134,7 @@ def test_checkpoint_bookkeeping_job_budget(spark, work_dir):
         ("stage_r_bkt", ("k", 4), lambda s: s.range(0, 200, 1, 3).withColumn("k", F.col("id") % 7)),
     ],
 )
-def test_resume_job_budget(spark, work_dir, stage, bucket_spec, make):
+def test_resume_job_budget(spark, work_dir, jobs_submitted, stage, bucket_spec, make):
     """Resuming a complete stage submits no Spark job: the schema comes from
     a data file's footer, not from inference. A bucketed stage is resumed as
     in a fresh session, with its catalog table gone."""
@@ -159,7 +145,7 @@ def test_resume_job_budget(spark, work_dir, stage, bucket_spec, make):
         spark.sql(f"DROP TABLE {store._bucket_table_name(stage)}")
     resumed = []
     recompute = lambda: (_ for _ in ()).throw(AssertionError("recomputed"))  # noqa: E731
-    assert _jobs_submitted(spark, lambda: resumed.append(store.run_table(stage, recompute))) == 0
+    assert jobs_submitted(lambda: resumed.append(store.run_table(stage, recompute))) == 0
     assert resumed[0].schema == written.schema
     assert sorted(resumed[0].collect()) == want
 

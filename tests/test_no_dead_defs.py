@@ -1,5 +1,5 @@
-"""Every top-level function or class in `functions/` and `operators/` has a
-caller: some module of the package, the tests, kgbench, the scripts, the
+"""Every top-level function or class in `functions/`, `operators/` and
+`plans/` has a caller: some module of the package, the tests, kgbench, the scripts, the
 tools, `__spark_entry__.py` or `bench.py` names it, as a bare name or as an
 attribute. A definition's own body does not count. Parses with `ast`; no
 Spark session."""
@@ -9,7 +9,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "llm_review_aggregation_spark"
-CHECKED = [PKG / "functions", PKG / "operators"]
+CHECKED = [PKG / "functions", PKG / "operators", PKG / "plans"]
 SOURCES = [PKG, ROOT / "tests", ROOT / "kgbench", ROOT / "scripts", ROOT / "tools",
            ROOT / "__spark_entry__.py", ROOT / "bench.py"]
 

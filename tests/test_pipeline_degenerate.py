@@ -44,6 +44,10 @@ class TestZeroPages:
         assert empty_result.synsets.columns == full.synsets.columns
         assert empty_result.arguments.count() == 0
 
+    def test_empty_outputs_read_without_a_job(self, empty_result, jobs_submitted):
+        for df in (empty_result.synsets, empty_result.ontology_edges, empty_result.arguments):
+            assert jobs_submitted(df.collect) == 0
+
     def test_root_and_maps_empty(self, empty_result):
         assert empty_result.root_name == ""
         assert empty_result.tree_edges == {}
