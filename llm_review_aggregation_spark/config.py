@@ -57,8 +57,8 @@ class PipelineConfig:
     # switch to distributed label propagation (operators/canonicalize.py)
     max_driver_cluster_terms: int = 512
 
-    # scorer backend: "lexicon" (deterministic test scorer), "hash",
-    # "bert" (requires torch/transformers; gated import), or "llm"
+    # scorer backend: "lexicon" (deterministic test scorer), "bert"
+    # (requires torch/transformers; gated import), or "llm"
     # (prompted extraction, M7; FakeLLMClient by default, HFLLMClient via
     # scorer_params["llm_client"])
     scorer: str = "lexicon"

@@ -189,7 +189,7 @@ def sparse_cosine_pairs(weights: DataFrame, threshold: float, salt_mod: int | No
     )
 
 
-def merge_phrase_tokens(sentences: DataFrame, terms: list[str], tokens_col: str = "tokens"):
+def merge_phrase_tokens(sentences: DataFrame, terms: list[str]):
     """Column expression: `tokens` with every multi-word term's token
     subsequence merged into one underscore-joined token — the gensim
     phrase-merge step the reference applies before Word2Vec training
@@ -200,7 +200,7 @@ def merge_phrase_tokens(sentences: DataFrame, terms: list[str], tokens_col: str 
     import re as _re
 
     phrases = [t.split(" ") for t in terms if " " in t]
-    col = F.concat(F.lit(" "), F.array_join(F.col(tokens_col), " "), F.lit(" "))
+    col = F.concat(F.lit(" "), F.array_join(F.col("tokens"), " "), F.lit(" "))
     # longest first so "optical zoom lens" wins over "optical zoom"
     for tt in sorted(phrases, key=len, reverse=True):
         pat = " " + _re.escape(" ".join(tt)) + "(?= )"
@@ -320,6 +320,35 @@ def subword_corpus(
     return toks.mapInPandas(gen, "_toks array<string>")
 
 
+def _fit_subword(
+    sentences: DataFrame,
+    terms: list[str],
+    window: int,
+    dim: int,
+    min_count: int,
+    epochs: int,
+    seed: int,
+    num_partitions: int,
+    ngram_min: int,
+    ngram_max: int,
+):
+    """Skip-gram fit over `subword_corpus`. The training window counts
+    STREAM tokens; each word occupies ~(1 + grams) stream slots, so the word
+    window is scaled to keep the word-level context width comparable
+    (estimated from the dictionary — deterministic, no extra corpus pass)."""
+    per_word = [
+        1 + len(_char_ngrams(w, ngram_min, ngram_max))
+        for t in terms
+        for w in _w2v_term_key(t).split("_")
+    ] or [1]
+    stream_window = max(window, int(round(window * sum(per_word) / len(per_word))))
+    corpus = subword_corpus(sentences, terms, ngram_min, ngram_max)
+    return _fit_word2vec(
+        sentences, terms, stream_window, dim, min_count, epochs, seed,
+        num_partitions, corpus=corpus,
+    )
+
+
 def build_fasttext_similarity_model(
     sentences: DataFrame,
     terms: list[str],
@@ -332,124 +361,30 @@ def build_fasttext_similarity_model(
     num_partitions: int = 1,
     ngram_min: int = 3,
     ngram_max: int = 6,
-    joint: bool = True,
-    tie_grams: bool = True,
 ) -> SimilarityModel:
     """M5 — FastText-style subword model (reference: gensim FastText
     skipgram size 100 window 5, concepts/fasttext_wrapper.py:34-67),
-    restated on public Spark API. MLlib has no FastText, so:
+    restated on public Spark API. MLlib has no FastText, so the skip-gram
+    fit runs over the SUBWORD training stream (`subword_corpus` — every
+    token followed inline by its boundary-marked char n-grams), and n-gram
+    vectors are TRAINED in the context of their words' neighbors — gensim
+    FastText's actual behavior on the input side. A term's vector is then
+    the mean of its trained word vector (when in-vocab) and its trained
+    n-gram vectors; OOV terms compose from n-grams alone. Update cost per
+    center word is ~(1 + grams) vector updates — the same order as real
+    FastText, which also updates every n-gram of the center word.
 
-    ``joint=True`` (default): the skip-gram fit runs over the SUBWORD
-    training stream (`subword_corpus` — every token followed inline by
-    its boundary-marked char n-grams), so n-gram vectors are TRAINED in
-    the context of their words' neighbors — gensim FastText's actual
-    behavior on the input side. A term's vector is then the mean of its
-    trained word vector (when in-vocab) and its trained n-gram vectors;
-    OOV terms compose from trained n-grams alone. The word-level window
-    is scaled by the mean stream tokens per word so the effective
-    word-context width stays comparable to the un-augmented fit. Update cost per center word is ~(1 + grams) vector
-    updates — the same order as real FastText, which also updates every
-    n-gram of the center word.
-
-    ``tie_grams=True`` (default, round 5) closes the one gap the joint fit
-    left vs gensim's shared-gradient training (word vectors trained as
-    their own stream tokens, not SGD-constrained to equal their n-gram
-    sum): a post-fit minimum-norm least-squares correction of the gram
-    matrix makes every in-vocab dictionary term's gram-only composition
-    reproduce its exposed composite, so OOV terms compose in the same
-    geometry the in-vocab terms live in (see _tie_gram_vectors; the pinned
-    OOV stem-margin test tightened accordingly).
-
-    ``joint=False``: the round-3 post-hoc substitution — word-level fit
-    (identical to M4), n-gram vectors synthesized afterwards as the mean
-    of trained vectors of vocabulary words containing them; OOV terms
-    compose from those. Cheaper (no corpus blow-up), weaker OOV geometry.
+    The joint fit trains word vectors as their own stream tokens, not
+    SGD-constrained to equal their n-gram sum as in gensim's
+    shared-gradient training. A post-fit minimum-norm least-squares
+    correction of the gram matrix (`_tie_gram_vectors`) closes that gap:
+    every in-vocab dictionary term's gram-only composition reproduces its
+    exposed composite, so OOV terms compose in the same geometry the
+    in-vocab terms live in.
     """
-    if joint:
-        return _build_fasttext_joint(
-            sentences, terms, window, dim, topn, min_count, epochs, seed,
-            num_partitions, ngram_min, ngram_max, tie_grams,
-        )
-    model = _fit_word2vec(sentences, terms, window, dim, min_count, epochs, seed, num_partitions)
-    keys = {_w2v_term_key(t): t for t in terms}
-    vec_tbl = model.getVectors()
-    rows = vec_tbl.filter(F.col("word").isin(list(keys))).collect()
-    by_term = {keys[r["word"]]: np.array(r["vector"].toArray()) for r in rows}
-    oov = [t for t in terms if t not in by_term]
-    if oov:
-        # distributed n-gram composition table, restricted to the n-grams
-        # the OOV terms actually need (bounded: |oov| x ~|word| x n_range).
-        # All JVM-side: substr-expanded n-grams, broadcast semi-join to the
-        # needed set, per-(gram, dimension) average via posexplode — the
-        # collect is |needed grams| x dim rows, independent of vocab size.
-        from pyspark.ml.functions import vector_to_array
-
-        needed = sorted(
-            {g for t in oov for w in _w2v_term_key(t).split("_") for g in _char_ngrams(w, ngram_min, ngram_max)}
-        )
-        marked = F.concat(F.lit("<"), F.col("word"), F.lit(">"))
-        per_n = []
-        for n in range(ngram_min, ngram_max + 1):
-            cnt = F.length(marked) - F.lit(n - 1)
-            per_n.append(
-                F.when(
-                    cnt >= 1,
-                    F.transform(F.sequence(F.lit(1), cnt), lambda i, n=n: marked.substr(i, F.lit(n))),
-                ).otherwise(F.array().cast("array<string>"))
-            )
-        grams_col = F.array_distinct(F.flatten(F.array(*per_n)))
-        needed_df = local_table(vec_tbl.sparkSession, [(g,) for g in needed], "gram string")
-        ng = (
-            vec_tbl.select(F.explode(grams_col).alias("gram"), vector_to_array("vector").alias("arr"))
-            .join(F.broadcast(needed_df), "gram")
-            .select("gram", F.posexplode("arr").alias("pos", "val"))
-            .groupBy("gram", "pos")
-            .agg(F.avg("val").alias("val"))
-            .collect()
-        )
-        gram_vec: dict[str, np.ndarray] = {}
-        for r in ng:
-            gram_vec.setdefault(r["gram"], np.zeros(dim))[r["pos"]] = r["val"]
-        for t in oov:
-            gs = [gram_vec[g] for w in _w2v_term_key(t).split("_") for g in _char_ngrams(w, ngram_min, ngram_max) if g in gram_vec]
-            if gs:
-                by_term[t] = np.mean(gs, axis=0)
-    vecs = np.zeros((len(terms), dim))
-    for i, t in enumerate(terms):
-        if t in by_term:
-            vecs[i] = by_term[t]
-    return SimilarityModel(terms, vecs, topn=topn)
-
-
-def _build_fasttext_joint(
-    sentences: DataFrame,
-    terms: list[str],
-    window: int,
-    dim: int,
-    topn: int,
-    min_count: int,
-    epochs: int,
-    seed: int,
-    num_partitions: int,
-    ngram_min: int,
-    ngram_max: int,
-    tie_grams: bool = True,
-) -> SimilarityModel:
-    """Joint-subword FastText fit (see build_fasttext_similarity_model)."""
-    # the training window counts STREAM tokens; each word occupies
-    # ~(1 + grams) stream slots, so scale the word window to keep the
-    # word-level context width comparable (estimated from the dictionary —
-    # deterministic, no extra corpus pass)
-    per_word = [
-        1 + len(_char_ngrams(w, ngram_min, ngram_max))
-        for t in terms
-        for w in _w2v_term_key(t).split("_")
-    ] or [1]
-    stream_window = max(window, int(round(window * sum(per_word) / len(per_word))))
-    corpus = subword_corpus(sentences, terms, ngram_min, ngram_max)
-    model = _fit_word2vec(
-        sentences, terms, stream_window, dim, min_count, epochs, seed,
-        num_partitions, corpus=corpus,
+    model = _fit_subword(
+        sentences, terms, window, dim, min_count, epochs, seed,
+        num_partitions, ngram_min, ngram_max,
     )
     keys = {_w2v_term_key(t): t for t in terms}
     wanted = sorted(
@@ -466,7 +401,7 @@ def _build_fasttext_joint(
     rows = model.getVectors().join(F.broadcast(wanted_df), "word").collect()
     vec_of = {r["word"]: np.array(r["vector"].toArray()) for r in rows}
     in_vocab = [k for k in keys if k in vec_of]
-    tied = _tie_gram_vectors(vec_of, in_vocab, ngram_min, ngram_max) if tie_grams else {}
+    tied = _tie_gram_vectors(vec_of, in_vocab, ngram_min, ngram_max)
     vecs = np.zeros((len(terms), dim))
     for i, t in enumerate(terms):
         key = _w2v_term_key(t)

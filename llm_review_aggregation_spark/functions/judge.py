@@ -114,28 +114,22 @@ class FakeJudgeClient:
         return [f"Score: [[{self._grade(p)}]] deterministic grade." for p in prompts]
 
 
-def judge_aspects(
-    aspects: DataFrame, client, product: str, term_col: str = "term", examples=None
-) -> DataFrame:
+def judge_aspects(aspects: DataFrame, client, product: str) -> DataFrame:
     """aspects(term, ...) -> (term, judge_score). One mapInPandas pass;
     each Arrow batch = one batched generate call."""
-    examples = tuple(examples or ())
 
     def gen(batches):
         for pdf in batches:
-            prompts = [aspect_judge_prompt(product, t, examples) for t in pdf[term_col]]
+            prompts = [aspect_judge_prompt(product, t) for t in pdf["term"]]
             scores = [parse_judge_score(r) for r in client.generate(prompts)]
-            yield pd.DataFrame({"term": pdf[term_col], "judge_score": scores})
+            yield pd.DataFrame({"term": pdf["term"], "judge_score": scores})
 
-    return aspects.select(F.col(term_col)).distinct().mapInPandas(
+    return aspects.select("term").distinct().mapInPandas(
         gen, "term string, judge_score int"
     )
 
 
-def judge_ontology_edges(
-    edges: DataFrame, client, category: str,
-    subj_col: str = "subj", obj_col: str = "obj", examples=None,
-) -> DataFrame:
+def judge_ontology_edges(edges: DataFrame, client, category: str, examples=None) -> DataFrame:
     """ontology_edges(subj=child, obj=parent, ...) -> (subj, obj,
     judge_score) — one batched pass over the (small) edge table."""
     examples = tuple(examples or ())
@@ -144,14 +138,12 @@ def judge_ontology_edges(
         for pdf in batches:
             prompts = [
                 relation_judge_prompt(category, parent, child, examples)
-                for child, parent in zip(pdf[subj_col], pdf[obj_col])
+                for child, parent in zip(pdf["subj"], pdf["obj"])
             ]
             scores = [parse_judge_score(r) for r in client.generate(prompts)]
-            yield pd.DataFrame(
-                {"subj": pdf[subj_col], "obj": pdf[obj_col], "judge_score": scores}
-            )
+            yield pd.DataFrame({"subj": pdf["subj"], "obj": pdf["obj"], "judge_score": scores})
 
-    return edges.select(subj_col, obj_col).distinct().mapInPandas(
+    return edges.select("subj", "obj").distinct().mapInPandas(
         gen, "subj string, obj string, judge_score int"
     )
 
@@ -169,15 +161,12 @@ def attach_judge_scores(edges: DataFrame, scored: DataFrame) -> DataFrame:
     return edges.join(F.broadcast(scored), ["subj", "obj"], "left")
 
 
-def make_fake_judge(params: dict | None = None) -> FakeJudgeClient:
-    params = params or {}
+def make_fake_judge() -> FakeJudgeClient:
+    """The fake judge graded against the synthetic corpus's lexicons."""
     from llm_review_aggregation_spark import synth
 
-    canon = params.get("canon")
-    if canon is None:
-        canon = {s: c for c, syns in synth.SYNONYMS.items() for s in syns}
     return FakeJudgeClient(
-        aspect_terms=frozenset(params.get("aspect_terms", synth.ASPECT_TERMS)),
-        meronyms=dict(params.get("meronyms", synth.MERONYMS)),
-        canon=dict(canon),
+        aspect_terms=frozenset(synth.ASPECT_TERMS),
+        meronyms=dict(synth.MERONYMS),
+        canon={s: c for c, syns in synth.SYNONYMS.items() for s in syns},
     )

@@ -30,6 +30,8 @@ MEDIA_SCHEMA = (
 )
 
 _MAGIC = b"FAKEMEDIA0000001"  # 16-byte header for the deterministic fake codec
+_FAKE_WIDTH, _FAKE_HEIGHT, _FAKE_FRAMES = 32, 24, 8  # fake image size, video length
+_HIST_BINS = 16  # intensity histogram bins of extract_image_features
 
 
 def _det_bytes(kind: str, media_id: int, n: int) -> bytes:
@@ -43,10 +45,12 @@ def _det_bytes(kind: str, media_id: int, n: int) -> bytes:
     )[:n]
 
 
-def fake_payload(kind: str, media_id: int, width: int = 32, height: int = 24, n_frames: int = 8) -> bytes:
+def fake_payload(kind: str, media_id: int) -> bytes:
     """Deterministic fake media blob: magic + packed dims + md5-chained bytes."""
-    body_len = {"image": width * height, "audio": 4 * 1024, "video": n_frames * 64}[kind]
-    header = _MAGIC + struct.pack("<iii", width, height, n_frames)
+    body_len = {
+        "image": _FAKE_WIDTH * _FAKE_HEIGHT, "audio": 4 * 1024, "video": _FAKE_FRAMES * 64
+    }[kind]
+    header = _MAGIC + struct.pack("<iii", _FAKE_WIDTH, _FAKE_HEIGHT, _FAKE_FRAMES)
     return header + _det_bytes(kind, media_id, body_len)
 
 
@@ -70,7 +74,7 @@ def _get_decoder(decoder: str):
     raise ValueError(f"unknown decoder: {decoder}")
 
 
-def extract_image_features(media: DataFrame, decoder: str = "fake", hist_bins: int = 16) -> DataFrame:
+def extract_image_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
     """image rows -> (media_id, width, height, mean_intensity,
     histogram array<double>). One Arrow batch in, one out; the decode runs
     once per row inside the batch loop — the real-codec path has the same
@@ -83,7 +87,7 @@ def extract_image_features(media: DataFrame, decoder: str = "fake", hist_bins: i
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 w, h, _n, body = dec(bytes(payload))
                 arr = np.frombuffer(body[: w * h], dtype=np.uint8).astype(np.float64)
-                hist, _ = np.histogram(arr, bins=hist_bins, range=(0, 256))
+                hist, _ = np.histogram(arr, bins=_HIST_BINS, range=(0, 256))
                 rows.append((int(mid), w, h, float(arr.mean()), (hist / max(arr.size, 1)).tolist()))
             yield pd.DataFrame(
                 rows, columns=["media_id", "width", "height", "mean_intensity", "histogram"]
@@ -95,10 +99,10 @@ def extract_image_features(media: DataFrame, decoder: str = "fake", hist_bins: i
     )
 
 
-def resize_images(media: DataFrame, out_w: int, out_h: int, decoder: str = "fake") -> DataFrame:
+def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """image rows -> (media_id, payload binary) resized via nearest-neighbor
-    sampling on the fake codec (a real codec plugs into the same signature)."""
-    dec = _get_decoder(decoder)
+    sampling on the fake codec."""
+    dec = _decode_fake
 
     def gen(batches):
         for pdf in batches:
@@ -143,10 +147,11 @@ def extract_audio_features(media: DataFrame, decoder: str = "fake") -> DataFrame
     )
 
 
-def sample_video_frames(media: DataFrame, every_k: int = 2, decoder: str = "fake") -> DataFrame:
+def sample_video_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
     """video rows -> one row per sampled frame (media_id, frame_idx,
-    frame binary) — the 1->N explode shape of real frame sampling."""
-    dec = _get_decoder(decoder)
+    frame binary) on the fake codec — the 1->N explode shape of real frame
+    sampling."""
+    dec = _decode_fake
 
     def gen(batches):
         for pdf in batches:
@@ -166,10 +171,10 @@ def sample_video_frames(media: DataFrame, every_k: int = 2, decoder: str = "fake
 def synth_media(spark, n_images: int = 20, n_videos: int = 5, n_audio: int = 5) -> DataFrame:
     rows = []
     for i in range(n_images):
-        rows.append((i, "image", fake_payload("image", i), (32, 24, 0, 0)))
+        rows.append((i, "image", fake_payload("image", i), (_FAKE_WIDTH, _FAKE_HEIGHT, 0, 0)))
     for i in range(n_videos):
         mid = 1000 + i
-        rows.append((mid, "video", fake_payload("video", mid), (0, 0, 0, 8)))
+        rows.append((mid, "video", fake_payload("video", mid), (0, 0, 0, _FAKE_FRAMES)))
     for i in range(n_audio):
         mid = 2000 + i
         rows.append((mid, "audio", fake_payload("audio", mid), (0, 0, 16000, 0)))

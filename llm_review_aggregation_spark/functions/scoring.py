@@ -10,12 +10,10 @@ Arrow batches stream through a single Python worker per partition (model
 weights, when a real backend is used, load once per worker — the iterator
 pattern keeps them warm across batches).
 
-CI uses deterministic backends (FIXTURES.md §4):
-- Hash*Scorer  — pseudo-probabilities from md5 of the canonical input; shared
-  with the oracle so both paths see identical scores.
-- Lexicon*Scorer — ground-truth-aware scores keyed on the synthetic
-  vocabulary (synth.py), making the end-to-end pipeline recover the planted
-  ontology; this is what the P/R gate runs against.
+CI uses the deterministic Lexicon*Scorer backend (FIXTURES.md §4):
+ground-truth-aware scores keyed on the synthetic vocabulary (synth.py), with
+an md5 jitter, making the end-to-end pipeline recover the planted ontology;
+the oracle shares it, and this is what the P/R gate runs against.
 A real BERT backend can implement the same protocol behind an import-try
 (torch is not available in this environment).
 """
@@ -40,15 +38,6 @@ def _h01(*parts: str) -> float:
 # ---------------------------------------------------------------------------
 
 
-class HashEntityScorer:
-    def score_entities(self, pdf: pd.DataFrame) -> pd.Series:
-        return pd.Series(
-            [_h01("ent", e, " ".join(t)) for e, t in zip(pdf["entity"], pdf["masked_tokens"])],
-            index=pdf.index,
-            dtype="float64",
-        )
-
-
 @dataclass
 class LexiconEntityScorer:
     """High prob for terms in the known aspect lexicon, low otherwise,
@@ -67,16 +56,6 @@ class LexiconEntityScorer:
 # ---------------------------------------------------------------------------
 # Relation scorer (M2): per instance, P(fst hasFeature snd), P(snd hasFeature fst)
 # ---------------------------------------------------------------------------
-
-
-class HashRelationScorer:
-    def score_relations(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        fwd, bwd = [], []
-        for c1, c2, t in zip(pdf["fst_concept"], pdf["snd_concept"], pdf["masked_tokens"]):
-            key = " ".join(t)
-            fwd.append(_h01("relf", c1, c2, key))
-            bwd.append(_h01("relb", c1, c2, key))
-        return pd.DataFrame({"forward_score": fwd, "backward_score": bwd}, index=pdf.index)
 
 
 @dataclass
@@ -108,15 +87,6 @@ class LexiconRelationScorer:
 # ---------------------------------------------------------------------------
 # Sentiment scorer (M3): signed polarity value per (phrase, target span)
 # ---------------------------------------------------------------------------
-
-
-class HashSentimentScorer:
-    def score_sentiments(self, pdf: pd.DataFrame) -> pd.Series:
-        return pd.Series(
-            [2 * _h01("sent", p, f, str(s)) - 1 for p, f, s in zip(pdf["phrase"], pdf["form"], pdf["start"])],
-            index=pdf.index,
-            dtype="float64",
-        )
 
 
 @dataclass
@@ -152,8 +122,6 @@ class LexiconSentimentScorer:
 
 def make_scorers(kind: str, params: dict):
     """Returns (entity_scorer, relation_scorer, sentiment_scorer)."""
-    if kind == "hash":
-        return HashEntityScorer(), HashRelationScorer(), HashSentimentScorer()
     if kind == "lexicon":
         from llm_review_aggregation_spark import synth
 

@@ -12,7 +12,7 @@ import hashlib
 
 import numpy as _np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
@@ -45,16 +45,10 @@ def stopword_ratio(text: Column) -> Column:
     return n_stop / F.greatest(F.size(toks), F.lit(1))
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = tokens_col(text)
-    total = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x)
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
-def lang_guess(text: Column, en_threshold: float = 0.12) -> Column:
-    """Heuristic language ID: English iff the stopword ratio clears a
-    threshold (n-gram/freq heuristics reduce to this on clean ASCII text)."""
-    return F.when(stopword_ratio(text) >= en_threshold, F.lit("en")).otherwise(F.lit("unknown"))
+def lang_guess(text: Column) -> Column:
+    """Heuristic language ID: English iff the stopword ratio clears 0.12
+    (n-gram/freq heuristics reduce to this on clean ASCII text)."""
+    return F.when(stopword_ratio(text) >= 0.12, F.lit("en")).otherwise(F.lit("unknown"))
 
 
 def quality_score(text: Column) -> Column:
@@ -70,22 +64,6 @@ def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercased text."""
     norm = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
     return F.md5(F.encode(norm, "utf-8"))
-
-
-def doc_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": n_tokens(t),
-            "n_chars": F.length(t),
-            "avg_token_len": avg_token_len(t),
-            "punct_ratio": punct_ratio(t),
-            "stopword_ratio": stopword_ratio(t),
-            "lang_guess": lang_guess(t),
-            "quality_score": quality_score(t),
-            "fingerprint": fingerprint(t),
-        }
-    )
 
 
 # ---------------------------------------------------------------------------

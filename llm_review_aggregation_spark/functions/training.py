@@ -34,6 +34,8 @@ LEARNING_RATE = 2e-5
 N_EPOCHS = 3
 WARM_UP_FRAC = 0.05
 MAX_GRAD_NORM = 1.0
+BATCH_SIZE = 32
+RELATION_BATCH_SIZE = 16
 
 
 def _hash_frac(col, salt: str):
@@ -49,7 +51,6 @@ def build_entity_training_set(
     candidate_terms: list[str],
     positive_terms: frozenset[str] | set[str],
     negative_ratio: float = 1.0,
-    seed_salt: str = "enttrain",
 ) -> DataFrame:
     """Distant-supervision training set for the entity head:
     (masked_tokens, entity_idx, entity, label).
@@ -73,7 +74,7 @@ def build_entity_training_set(
     keep_frac = min(1.0, negative_ratio * n_pos / n_neg)
     key = F.concat_ws("#", "url", F.col("sent_id").cast("string"), "entity")
     return labeled.filter(
-        (F.col("label") == 1) | (_hash_frac(key, seed_salt) < F.lit(keep_frac))
+        (F.col("label") == 1) | (_hash_frac(key, "enttrain") < F.lit(keep_frac))
     )
 
 
@@ -83,7 +84,6 @@ def build_relation_training_set(
     syn_dict: dict[str, list[str]],
     meronyms: dict[str, str],
     negative_ratio: float = 1.0,
-    seed_salt: str = "reltrain",
 ) -> DataFrame:
     """Distant-supervision training set for the relation head:
     (masked_tokens, fst_idx, snd_idx, fst_concept, snd_concept, label) with
@@ -122,7 +122,7 @@ def build_relation_training_set(
     keep_frac = min(1.0, negative_ratio * n_pos / n_neg)
     key = F.concat_ws("#", "url", F.col("sent_id").cast("string"), "fst_concept", "snd_concept")
     return labeled.filter(
-        (F.col("label") > 0) | (_hash_frac(key, seed_salt) < F.lit(keep_frac))
+        (F.col("label") > 0) | (_hash_frac(key, "reltrain") < F.lit(keep_frac))
     )
 
 
@@ -135,7 +135,6 @@ def build_sentiment_training_set(
     positive: frozenset[str] | set[str],
     negative: frozenset[str] | set[str],
     neutral_ratio: float = 1.0,
-    seed_salt: str = "senttrain",
 ) -> DataFrame:
     """Distant-supervision training set for the targeted-sentiment head:
     glossary-match rows (phrase, form, start, end — the T9 output, i.e.
@@ -165,14 +164,14 @@ def build_sentiment_training_set(
     keep_frac = min(1.0, neutral_ratio * n_op / n_neu)
     key = F.concat_ws("#", "phrase", "form", F.col("start").cast("string"))
     return labeled.filter(
-        (F.col("label") != neutral) | (_hash_frac(key, seed_salt) < F.lit(keep_frac))
+        (F.col("label") != neutral) | (_hash_frac(key, "senttrain") < F.lit(keep_frac))
     )
 
 
-def train_val_split(df: DataFrame, val_frac: float = 0.1, key_cols: tuple[str, ...] = ("url",)) -> tuple[DataFrame, DataFrame]:
-    """Deterministic split on a hash of the key columns (grouping by url so
-    sentences of one document never straddle the split)."""
-    h = _hash_frac(F.concat_ws("#", *key_cols), "valsplit")
+def train_val_split(df: DataFrame, val_frac: float = 0.1) -> tuple[DataFrame, DataFrame]:
+    """Deterministic split on a hash of `url` (so sentences of one document
+    never straddle the split)."""
+    h = _hash_frac(F.concat_ws("#", "url"), "valsplit")
     return df.filter(h >= val_frac), df.filter(h < val_frac)
 
 
@@ -187,13 +186,7 @@ def _require_torch():  # pragma: no cover - heavy deps absent in CI
         ) from exc
 
 
-def fit_entity_head(
-    train_pdf,
-    out_path: str,
-    batch_size: int = 32,
-    n_epochs: int = N_EPOCHS,
-    lr: float = LEARNING_RATE,
-):  # pragma: no cover - torch absent in sandbox
+def fit_entity_head(train_pdf, out_path: str):  # pragma: no cover - needs torch
     """Single-node fine-tune of BERT + linear(768->2) on a sampled pandas
     frame (columns masked_tokens, entity_idx, label), with the reference's
     exact schedule: Adam, linear warmup over WARM_UP_FRAC of steps,
@@ -214,17 +207,17 @@ def fit_entity_head(
     bert.to(device)
     head.to(device)
     params = list(bert.parameters()) + list(head.parameters())
-    optimiser = torch.optim.Adam(params, lr=lr)
-    n_steps = max(1, (len(train_pdf) // batch_size) * n_epochs)
+    optimiser = torch.optim.Adam(params, lr=LEARNING_RATE)
+    n_steps = max(1, (len(train_pdf) // BATCH_SIZE) * N_EPOCHS)
     scheduler = get_linear_schedule_with_warmup(
         optimiser, int(WARM_UP_FRAC * n_steps), n_steps
     )
     loss_fn = torch.nn.CrossEntropyLoss()
 
-    for _epoch in range(n_epochs):
+    for _epoch in range(N_EPOCHS):
         shuffled = train_pdf.sample(frac=1.0, random_state=_epoch)
-        for lo in range(0, len(shuffled), batch_size):
-            chunk = shuffled.iloc[lo : lo + batch_size]
+        for lo in range(0, len(shuffled), BATCH_SIZE):
+            chunk = shuffled.iloc[lo : lo + BATCH_SIZE]
             inputs, enc = bs._encode(tokenizer, list(chunk["masked_tokens"]), device)
             pos = [bs._word_to_token_idx(enc, i, int(w)) for i, w in enumerate(chunk["entity_idx"])]
             target = torch.tensor(list(chunk["label"]), dtype=torch.long, device=device)
@@ -243,13 +236,7 @@ def fit_entity_head(
     return out_path
 
 
-def fit_relation_head(
-    train_pdf,
-    out_path: str,
-    batch_size: int = 16,
-    n_epochs: int = N_EPOCHS,
-    lr: float = LEARNING_RATE,
-):  # pragma: no cover - torch absent in sandbox
+def fit_relation_head(train_pdf, out_path: str):  # pragma: no cover - needs torch
     """Single-node fine-tune of BERT + linear(1536->3) over the concat of
     the two mention hidden states (columns masked_tokens, fst_idx, snd_idx,
     label with the 3-class convention of build_relation_training_set). The
@@ -272,17 +259,17 @@ def fit_relation_head(
     bert.to(device)
     head.to(device)
     params = list(bert.parameters()) + list(head.parameters())
-    optimiser = torch.optim.Adam(params, lr=lr)
-    n_steps = max(1, (len(train_pdf) // batch_size) * n_epochs)
+    optimiser = torch.optim.Adam(params, lr=LEARNING_RATE)
+    n_steps = max(1, (len(train_pdf) // RELATION_BATCH_SIZE) * N_EPOCHS)
     scheduler = get_linear_schedule_with_warmup(
         optimiser, int(WARM_UP_FRAC * n_steps), n_steps
     )
     loss_fn = torch.nn.CrossEntropyLoss()
 
-    for _epoch in range(n_epochs):
+    for _epoch in range(N_EPOCHS):
         shuffled = train_pdf.sample(frac=1.0, random_state=_epoch)
-        for lo in range(0, len(shuffled), batch_size):
-            chunk = shuffled.iloc[lo : lo + batch_size]
+        for lo in range(0, len(shuffled), RELATION_BATCH_SIZE):
+            chunk = shuffled.iloc[lo : lo + RELATION_BATCH_SIZE]
             inputs, enc = bs._encode(tokenizer, list(chunk["masked_tokens"]), device)
             p1 = [bs._word_to_token_idx(enc, i, int(w)) for i, w in enumerate(chunk["fst_idx"])]
             p2 = [bs._word_to_token_idx(enc, i, int(w)) for i, w in enumerate(chunk["snd_idx"])]
@@ -308,13 +295,7 @@ SENTIMENT_N_EPOCHS = 6
 SENTIMENT_LEARNING_RATE = 2e-5
 
 
-def fit_sentiment_head(
-    train_pdf,
-    out_path: str,
-    batch_size: int = 32,
-    n_epochs: int = SENTIMENT_N_EPOCHS,
-    lr: float = SENTIMENT_LEARNING_RATE,
-):  # pragma: no cover - torch absent in sandbox
+def fit_sentiment_head(train_pdf, out_path: str):  # pragma: no cover - needs torch
     """Single-node fine-tune of BERT + linear(768->4) with max-pooling over
     the target char-span's wordpieces (columns phrase, start, end, label in
     POLARITY_INDICES) — the TDBertNet architecture and pooling
@@ -335,13 +316,13 @@ def fit_sentiment_head(
     bert.to(device)
     head.to(device)
     params = list(bert.parameters()) + list(head.parameters())
-    optimiser = torch.optim.Adam(params, lr=lr)
+    optimiser = torch.optim.Adam(params, lr=SENTIMENT_LEARNING_RATE)
     loss_fn = torch.nn.CrossEntropyLoss()
 
-    for _epoch in range(n_epochs):
+    for _epoch in range(SENTIMENT_N_EPOCHS):
         shuffled = train_pdf.sample(frac=1.0, random_state=_epoch)
-        for lo in range(0, len(shuffled), batch_size):
-            chunk = shuffled.iloc[lo : lo + batch_size]
+        for lo in range(0, len(shuffled), BATCH_SIZE):
+            chunk = shuffled.iloc[lo : lo + BATCH_SIZE]
             enc = tokenizer(
                 list(chunk["phrase"]),
                 truncation=True,

@@ -31,6 +31,9 @@ from pyspark.sql.types import ArrayType, LongType
 
 from llm_review_aggregation_spark.session import local_table
 
+# hashed context buckets of the co-occurrence vectors (cluster_synsets_scale)
+_COOC_DIM = 4096
+
 
 def label_propagation(edges: DataFrame, max_rounds: int = 3) -> DataFrame:
     """edges(src string, dst string), undirected -> (node, component).
@@ -69,8 +72,6 @@ def cluster_synsets_scale(
     similarity_threshold: float,
     num_levels: int = 3,
     window: int = 4,
-    dim: int = 4096,
-    salt_mod: int | None = None,
 ) -> tuple[dict[str, int], dict[str, list[str]]]:
     """E5 at scale: distributed synonym canonicalization for dictionaries too
     large for the driver-exact G1 replica (north star: "connected-components
@@ -97,11 +98,9 @@ def cluster_synsets_scale(
     from llm_review_aggregation_spark.functions import embeddings
 
     terms = list(counts)
-    cooc = embeddings.cooccurrence_counts(sentences, terms, window, dim)
+    cooc = embeddings.cooccurrence_counts(sentences, terms, window, _COOC_DIM)
     w = embeddings.ppmi_weights(cooc)
-    edges = embeddings.sparse_cosine_pairs(w, similarity_threshold, salt_mod=salt_mod).select(
-        "src", "dst"
-    )
+    edges = embeddings.sparse_cosine_pairs(w, similarity_threshold).select("src", "dst")
 
     # lemma-equal terms are synonyms by definition (word_vectoriser_base.py:
     # 77-108 returns similarity 1.0); chain each lemma group with n-1 edges

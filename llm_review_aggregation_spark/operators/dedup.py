@@ -225,12 +225,12 @@ def jaccard_pairs_bitset(
 
 
 def minhash_near_duplicates(
-    df: DataFrame, text_col: str, id_col: str,
-    num_hashes: int = 16, bands: int = 4, shingle_k: int = 3, threshold: float = 0.8,
+    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.8,
 ) -> DataFrame:
-    """The full scale recipe: LSH blocking then Jaccard verification."""
-    blocks = canonicalize.minhash_lsh_blocks(df, text_col, id_col, num_hashes, bands, shingle_k)
-    return jaccard_pairs(df, text_col, id_col, shingle_k, threshold, blocks=blocks)
+    """The full scale recipe: LSH blocking (16 hashes in 4 bands over
+    3-shingles) then Jaccard verification."""
+    blocks = canonicalize.minhash_lsh_blocks(df, text_col, id_col, 16, 4, 3)
+    return jaccard_pairs(df, text_col, id_col, 3, threshold, blocks=blocks)
 
 
 # ---------------------------------------------------------------------------
@@ -311,7 +311,7 @@ IVF_ROUTE_THRESHOLD = 0.6
 
 def embedding_near_duplicates_ivf(
     df: DataFrame, vec_col: str, id_col: str, threshold: float = 0.35,
-    nlist: int = 256, nprobe: int = 88, tables: int = 4, require: int | None = None,
+    nlist: int = 256, nprobe: int = 88, tables: int = 4,
 ) -> DataFrame:
     """AND-amplified IVF candidates verified by exact cosine — the scale
     path for LOOSE similarity joins (low thresholds), where sign-LSH bucket
@@ -320,8 +320,7 @@ def embedding_near_duplicates_ivf(
     vector is indexed under its single nearest cell (home) and probes its
     `nprobe` nearest cells; a table-t collision means either endpoint's home
     cell is among the other's probed cells. A pair graduates to exact-cosine
-    verification only when it collides in >= `require` of the `tables`
-    tables (default: all of them) — the classic LSH AND-construction, which
+    verification only when it collides in all `tables` tables — the classic LSH AND-construction, which
     sharpens the single-table collision curve: per-table recall^T falls far
     slower than per-table noise-rate^T because true pairs collide with
     probability ~0.95 per table at these settings while random pairs sit
@@ -338,14 +337,14 @@ def embedding_near_duplicates_ivf(
     join, which carries two dim-d vectors). Recall < 1 by construction —
     containment vs embedding_near_duplicates_exact is pytest-enforced. At
     corpus scale pick nlist ~ sqrt(n) so centroid count and cell occupancy
-    grow together; drop `tables`/raise `require` to trade recall for cost."""
-    cand = ivf_candidate_pairs(df, vec_col, id_col, nlist, nprobe, tables, require)
+    grow together; drop `tables` to trade cost for recall."""
+    cand = ivf_candidate_pairs(df, vec_col, id_col, nlist, nprobe, tables)
     return _verify_cosine_pairs(df, vec_col, id_col, cand, threshold)
 
 
 def ivf_candidate_pairs(
     df: DataFrame, vec_col: str, id_col: str,
-    nlist: int = 256, nprobe: int = 88, tables: int = 4, require: int | None = None,
+    nlist: int = 256, nprobe: int = 88, tables: int = 4,
 ) -> DataFrame:
     """The (a, b) candidate set the amplified IVF near-dup join verifies —
     exposed so tests and capacity planning can measure prune (all-pairs /
@@ -356,9 +355,6 @@ def ivf_candidate_pairs(
     DataFrame is first used, and its blocks live only in executor storage.
     It has no lineage to recompute from, so losing an executor that holds
     one of its blocks fails the queries that read it; call again to rebuild."""
-    require = tables if require is None else require
-    if not (1 <= require <= tables):
-        raise ValueError(f"require must be in [1, {tables}], got {require}")
     per_table = []
     cached = []
     for t in range(tables):
@@ -391,7 +387,7 @@ def ivf_candidate_pairs(
     cand = (
         votes.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("_nt"))
-        .filter(F.col("_nt") >= require)
+        .filter(F.col("_nt") >= tables)
         .select("a", "b")
     )
     try:
@@ -408,8 +404,7 @@ def ivf_candidate_pairs(
 def embedding_near_duplicates(
     df: DataFrame, vec_col: str, id_col: str, threshold: float = 0.95,
     planes: int = 12, probe_hamming: int = 1, tables: int = 1,
-    nlist: int = 256, nprobe: int = 88, ivf_tables: int = 4,
-    ivf_require: int | None = None, method: str = "auto",
+    nlist: int = 256, nprobe: int = 88, ivf_tables: int = 4, method: str = "auto",
 ) -> DataFrame:
     """Blocked cosine near-dup pairs, verified by exact cosine. Candidate
     generation routes by regime (method="auto"):
@@ -420,7 +415,7 @@ def embedding_near_duplicates(
     - threshold < IVF_ROUTE_THRESHOLD: AND-amplified IVF home-vs-probe pairs
       (embedding_near_duplicates_ivf) — at loose thresholds sign-LSH
       collision odds approach 1/2 and buckets stop pruning, while requiring
-      a collision in `ivf_require` of `ivf_tables` independent IVF tables
+      a collision in all `ivf_tables` independent IVF tables
       holds recall >= 0.84 at >5x candidate prune (measured, sf0.1).
 
     Either way candidates are bucket/cell-joined only (never all-pairs) and
@@ -431,7 +426,7 @@ def embedding_near_duplicates(
     if method == "ivf" or (method == "auto" and threshold < IVF_ROUTE_THRESHOLD):
         return embedding_near_duplicates_ivf(
             df, vec_col, id_col, threshold, nlist=nlist, nprobe=nprobe,
-            tables=ivf_tables, require=ivf_require,
+            tables=ivf_tables,
         )
     buckets = simsearch.hyperplane_buckets(
         df, vec_col, id_col, planes=planes, probe_hamming=probe_hamming, tables=tables

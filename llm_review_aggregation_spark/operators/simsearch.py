@@ -109,18 +109,17 @@ def hyperplane_buckets(
     id_col: str,
     planes: int = 12,
     probe_hamming: int = 0,
-    seed: int = 42,
     tables: int = 1,
 ) -> DataFrame:
-    """(id, bucket). `tables` independent hash tables (separately seeded
-    hyperplane sets) trade index size for recall; bucket ids are namespaced
+    """(id, bucket). `tables` independent hash tables (hyperplane sets
+    seeded 42, 1042, 2042, ...) trade index size for recall; bucket ids are namespaced
     per table so the downstream join stays a single equi-join. With
     probe_hamming=h > 0, each row is additionally replicated into every
     bucket within hamming distance h of its own (multi-probe on the *index*
     side keeps the query-side join plain)."""
     per_table = []
     for t in range(tables):
-        per_table.append(_bucket_expr(vec_col, planes, seed + 1000 * t) + F.lit(t * 2**planes))
+        per_table.append(_bucket_expr(vec_col, planes, 42 + 1000 * t) + F.lit(t * 2**planes))
     out = df.select(
         F.col(id_col).alias("id"), F.explode(F.array(*per_table)).alias("bucket0")
     )
@@ -240,13 +239,12 @@ def lsh_topk(
     k: int = 10,
     planes: int = 8,
     probe_hamming: int = 1,
-    seed: int = 42,
     tables: int = 4,
 ) -> DataFrame:
     """Approximate top-k: bucket-joined candidates, exact cosine re-rank.
     Fully lazy — no driver-side action before the plan executes."""
-    cb = hyperplane_buckets(corpus, vec_col, id_col, planes, probe_hamming, seed, tables)
-    qb = hyperplane_buckets(queries, vec_col, q_id_col, planes, 0, seed, tables).withColumnRenamed(
+    cb = hyperplane_buckets(corpus, vec_col, id_col, planes, probe_hamming, tables=tables)
+    qb = hyperplane_buckets(queries, vec_col, q_id_col, planes, 0, tables=tables).withColumnRenamed(
         "id", "q_id"
     )
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("cvec"))

@@ -13,7 +13,7 @@ not bound state:
   skew-join splitting for the residual join).
 
 ``salted_agg`` runs groupBy(keys + salt) -> partial aggregate ->
-groupBy(keys) -> merge. The salt spreads one hot key over ``salt_mod``
+groupBy(keys) -> merge. The salt spreads one hot key over ``SALT_MOD``
 reducers in phase 1, bounding any single task's state.
 
 Reference analog: the A1/A6 accumulations (Counter updates / matrix sums,
@@ -26,15 +26,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+SALT_MOD = 16
 
-def with_salt(df: DataFrame, salt_mod: int, col_name: str = "_salt") -> DataFrame:
-    """Per-row salt in [0, salt_mod): a hash of the row's columns AND its
-    row id, so the rows of one hot key spread over the salt values even
-    when the key is the only column. The row id makes the salt fixed for a
-    given input partitioning, not across repartitionings; results do not
-    depend on it, because the merge phase sums or unions the partials."""
+
+def with_salt(df: DataFrame, salt_mod: int) -> DataFrame:
+    """Per-row salt column `_salt` in [0, salt_mod): a hash of the row's
+    columns AND its row id, so the rows of one hot key spread over the salt
+    values even when the key is the only column. The row id makes the salt
+    fixed for a given input partitioning, not across repartitionings;
+    results do not depend on it, because the merge phase sums or unions the
+    partials."""
     row = F.struct(*[F.col(c) for c in df.columns])
-    return df.withColumn(col_name, F.pmod(F.hash(row, F.monotonically_increasing_id()), F.lit(salt_mod)))
+    return df.withColumn("_salt", F.pmod(F.hash(row, F.monotonically_increasing_id()), F.lit(salt_mod)))
 
 
 def salted_agg(
@@ -42,7 +45,6 @@ def salted_agg(
     keys: list[str],
     partial_aggs: list[Column],
     merge_aggs: list[Column],
-    salt_mod: int = 16,
 ) -> DataFrame:
     """Two-stage skew-safe aggregation.
 
@@ -58,24 +60,23 @@ def salted_agg(
             merge_aggs=[F.array_distinct(F.flatten(F.collect_list("ps"))).alias("phrases")],
         )
     """
-    salted = with_salt(df, salt_mod)
+    salted = with_salt(df, SALT_MOD)
     partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*merge_aggs)
 
 
-def salted_count(df: DataFrame, keys: list[str], salt_mod: int = 16) -> DataFrame:
+def salted_count(df: DataFrame, keys: list[str]) -> DataFrame:
     """Skew-safe count per key (equivalent to groupBy(keys).count())."""
     return salted_agg(
         df,
         keys,
         partial_aggs=[F.count(F.lit(1)).alias("_c")],
         merge_aggs=[F.sum("_c").alias("count")],
-        salt_mod=salt_mod,
     )
 
 
-def salted_topk_by_count(df: DataFrame, key: str, k: int, salt_mod: int = 16) -> DataFrame:
+def salted_topk_by_count(df: DataFrame, key: str, k: int) -> DataFrame:
     """Global top-k keys by frequency with the lexicographic tiebreak pinned
     (SURVEY §7 R1) — the skew-safe form of A2 candidate ranking."""
-    counts = salted_count(df, [key], salt_mod)
+    counts = salted_count(df, [key])
     return counts.orderBy(F.desc("count"), F.asc(key)).limit(k)

@@ -53,6 +53,8 @@ _LINEAGE_ARROW = pa.schema([
 _PART_RE = re.compile(r"part-(\d+)")
 # parquet footer key under which Spark's writer stores the row schema as JSON
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# the session catalog that table_format="iceberg" writes through
+_CATALOG = "spark_catalog"
 
 
 class StageStore:
@@ -61,19 +63,18 @@ class StageStore:
         spark: SparkSession,
         work_dir: str,
         table_format: str = "parquet",
-        catalog: str = "spark_catalog",
         bucket_spec: dict[str, tuple[str, int]] | None = None,
     ):
         """`bucket_spec` maps a stage name to (key, n_buckets): that stage's
         checkpoint is written hash-bucketed (and sorted) on the key, so every
         downstream join/aggregate on it plans without an Exchange — one
-        shuffle at write time buys shuffle-free repeated consumption
-        (plans/bucketing.py holds the rationale). Parquet format only; the
+        shuffle at write time buys shuffle-free repeated consumption, and at
+        scale the shuffle on the join key is the dominant cost of repeated
+        joins. Parquet format only; the
         bucket layout lives in the session catalog and is re-registered from
         the on-disk files on resume in a fresh session."""
         self.spark = spark
         self.work_dir = work_dir
-        self.catalog = catalog
         self.bucket_spec = dict(bucket_spec or {})
         os.makedirs(work_dir, exist_ok=True)
         if table_format == "iceberg" and not self._iceberg_usable():
@@ -91,16 +92,16 @@ class StageStore:
         return "kg_" + re.sub(r"[^A-Za-z0-9_]", "_", self.work_dir).strip("_")
 
     def _table_ident(self, stage: str) -> str:
-        return f"{self.catalog}.{self._namespace()}.{stage}"
+        return f"{_CATALOG}.{self._namespace()}.{stage}"
 
     def _iceberg_usable(self) -> bool:
         """True iff the session's catalog accepts Iceberg v2 writes (an
         Iceberg SparkCatalog / SparkSessionCatalog is configured)."""
-        impl = self.spark.conf.get(f"spark.sql.catalog.{self.catalog}", None)
+        impl = self.spark.conf.get(f"spark.sql.catalog.{_CATALOG}", None)
         if not impl or "iceberg" not in impl.lower():
             return False
         try:
-            self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.{self._namespace()}")
+            self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {_CATALOG}.{self._namespace()}")
             return True
         except Exception:
             return False
@@ -241,15 +242,14 @@ class StageStore:
         os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
     # -- DataFrame stages ------------------------------------------------------
-    def run_table(self, stage: str, fn, resume: bool = True) -> DataFrame:
-        """Checkpoint `fn()` as `stage`, or, when `resume` and the stage's
-        lineage says complete, read the checkpoint back without calling
-        `fn`. With parquet a fresh stage costs one Spark job, its write:
-        the lineage rows come from the written files' footers, completion
-        is read on the driver, and the read-back reuses the schema just
-        written instead of inferring it. `duration_sec` covers compute and
-        write."""
-        if resume and self.is_complete(stage):
+    def run_table(self, stage: str, fn) -> DataFrame:
+        """Checkpoint `fn()` as `stage`, or, when the stage's lineage says
+        complete, read the checkpoint back without calling `fn`. With
+        parquet a fresh stage costs one Spark job, its write: the lineage
+        rows come from the written files' footers, completion is read on
+        the driver, and the read-back reuses the schema just written
+        instead of inferring it. `duration_sec` covers compute and write."""
+        if self.is_complete(stage):
             return self._read_table(stage)
         t0 = time.time()
         df = fn()
@@ -258,9 +258,9 @@ class StageStore:
         return self._read_table(stage, schema=df.schema)
 
     # -- small JSON artifacts (phrase tables, synsets, tree) -------------------
-    def run_artifact(self, stage: str, fn, resume: bool = True):
+    def run_artifact(self, stage: str, fn):
         path = self._artifact_path(stage)
-        if resume and os.path.exists(path):
+        if os.path.exists(path):
             with open(path) as f:
                 return json.load(f)
         value = fn()
@@ -273,7 +273,7 @@ class StageStore:
 
     def lineage(self) -> DataFrame:
         if self.table_format == "iceberg":
-            ns = f"{self.catalog}.{self._namespace()}"
+            ns = f"{_CATALOG}.{self._namespace()}"
             names = [
                 r["tableName"]
                 for r in self.spark.sql(f"SHOW TABLES IN {ns}").collect()
@@ -336,17 +336,21 @@ class StageStore:
         )
 
 
-def skew_advice(metrics_df: DataFrame, threshold: float = 4.0) -> list[dict]:
+# max/mean partition rows at which skew_advice flags a stage
+SKEW_THRESHOLD = 4.0
+
+
+def skew_advice(metrics_df: DataFrame) -> list[dict]:
     """Turn the per-stage `partition_skew` metric into advice for a manual
-    fix: stages whose max-partition/mean-partition row ratio exceeds
-    `threshold` get a flagged row naming what to change before the next run
+    fix: stages whose max-partition/mean-partition row ratio reaches
+    SKEW_THRESHOLD get a flagged row naming what to change before the next run
     (operators/skew.py salted_agg, or a repartition on a finer key). Nothing
     acts on it: the metric is a checkpoint's output layout, not a task's
     load. Single-partition stages can't be skewed by definition and tiny
     stages aren't worth salting, so both are exempt. Returned as plain dicts
     so the CLI report can embed it."""
     rows = metrics_df.filter(
-        (F.col("partition_skew") >= threshold)
+        (F.col("partition_skew") >= SKEW_THRESHOLD)
         & (F.col("n_partitions") > 1)
         & (F.col("output_rows") >= 1000)
     ).collect()
@@ -358,7 +362,7 @@ def skew_advice(metrics_df: DataFrame, threshold: float = 4.0) -> list[dict]:
             "output_rows": r["output_rows"],
             "advice": (
                 "partition skew exceeds "
-                f"{threshold}x: before the next run, rewrite this stage's "
+                f"{SKEW_THRESHOLD}x: before the next run, rewrite this stage's "
                 "aggregate with a salted key "
                 "(llm_review_aggregation_spark.operators.skew.salted_agg) or "
                 "repartition its input on a finer key"
@@ -374,8 +378,8 @@ class EphemeralStore:
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
-    def run_table(self, stage: str, fn, resume: bool = True) -> DataFrame:
+    def run_table(self, stage: str, fn) -> DataFrame:
         return fn()
 
-    def run_artifact(self, stage: str, fn, resume: bool = True):
+    def run_artifact(self, stage: str, fn):
         return fn()

@@ -70,7 +70,6 @@ def run_pipeline(
     pages: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     work_dir: str | None = None,
-    resume: bool = True,
     bucket_triples: int | None = None,
 ) -> PipelineResult:
     """``bucket_triples=N`` writes the triples checkpoint hash-bucketed (and
@@ -90,23 +89,22 @@ def run_pipeline(
     entity_scorer, relation_scorer, sentiment_scorer = scoring.make_scorers(cfg.scorer, cfg.scorer_params)
 
     # E1/E2 ---------------------------------------------------------------
-    docs = store.run_table("docs", lambda: cleaning.extract_docs(pages), resume)
+    docs = store.run_table("docs", lambda: cleaning.extract_docs(pages))
     # Ephemeral (no work_dir): E1+E2 run FUSED straight from pages — the
     # cleaned text crosses the Arrow boundary once instead of chaining two
     # Python runners (tokenize.segment_pages; byte-identical semantics,
     # differential-tested). With a work_dir the docs checkpoint already
     # holds the cleaned text, so segmenting reads it instead of re-cleaning.
     if work_dir:
-        sentences = store.run_table("sentences", lambda: tokenize.segment_sentences(docs), resume)
+        sentences = store.run_table("sentences", lambda: tokenize.segment_sentences(docs))
     else:
-        sentences = store.run_table("sentences", lambda: tokenize.segment_pages(pages), resume)
+        sentences = store.run_table("sentences", lambda: tokenize.segment_pages(pages))
     sentences.cache()
 
     # E3 --------------------------------------------------------------------
     pairs = store.run_artifact(
         "phrase_vocab",
         lambda: sorted(mining.build_phrase_vocab(sentences, cfg.phrase_min_count, cfg.phrase_threshold)),
-        resume,
     )
     pair_set = {tuple(p) for p in pairs}
     candidates = store.run_table(
@@ -114,14 +112,12 @@ def run_pipeline(
         lambda: mining.top_candidates(
             mining.count_noun_terms(sentences, pair_set), cfg.n_candidate_aspects
         ),
-        resume,
     )
 
     # E4 --------------------------------------------------------------------
     aspects_df = store.run_table(
         "aspects",
         lambda: aspects_ops.extract_aspects(sentences, candidates, entity_scorer, cfg.entity_prob_threshold),
-        resume,
     )
 
     # E5 --------------------------------------------------------------------
@@ -165,7 +161,7 @@ def run_pipeline(
             )
         return {"root": root_name, "synset_counts": synset_counts, "synsets": synsets}
 
-    concept_art = store.run_artifact("concepts", _cluster, resume)
+    concept_art = store.run_artifact("concepts", _cluster)
     root_name = concept_art["root"]
     if root_name is None:
         # degenerate corpus (no aspects survived): emit empty, well-typed outputs
@@ -200,7 +196,6 @@ def run_pipeline(
     synsets_df = store.run_table(
         "synsets",
         lambda: local_table(spark, synsets_rows, "concept string, member string, count long"),
-        resume,
     )
 
     # E6 --------------------------------------------------------------------
@@ -208,14 +203,12 @@ def run_pipeline(
     meronym_scores = store.run_table(
         "meronym_scores",
         lambda: relations_ops.accumulate_meronym_scores(sentences, concepts_list, synset_map, relation_scorer),
-        resume,
     )
     ontology_edges = store.run_table(
         "ontology_edges",
         lambda: relations_ops.build_ontology_edges(
             spark, meronym_scores, concepts_list, synset_counts, root_name
         ),
-        resume,
     )
     tree_edges = {r["subj"]: r["obj"] for r in ontology_edges.collect()}
 
@@ -239,7 +232,6 @@ def run_pipeline(
             cfg.sentiment_threshold,
             cfg.phrase_max_words,
         ),
-        resume,
     )
 
     # materialize graph ------------------------------------------------------
@@ -252,7 +244,7 @@ def run_pipeline(
         )
         return ontology_edges.select("subj", "pred", "obj", "score").unionByName(opinion)
 
-    triples = store.run_table("triples", _triples, resume)
+    triples = store.run_table("triples", _triples)
 
     return PipelineResult(
         docs=docs,

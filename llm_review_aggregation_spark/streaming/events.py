@@ -59,10 +59,10 @@ def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str
     return q
 
 
-def streaming_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Incremental exact dedup on (event_id) within the watermark — the
-    streaming analog of operators/dedup.dedup_exact."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+def streaming_dedup(events: DataFrame) -> DataFrame:
+    """Incremental exact dedup on (event_id) within a one-hour watermark —
+    the streaming analog of operators/dedup.dedup_exact."""
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
 
 
 def sessionize(

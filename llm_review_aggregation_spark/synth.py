@@ -194,12 +194,8 @@ def synthesize_pages_pdf(
     return pd.DataFrame(rows)
 
 
-def synthesize_pages(spark, n_groups: int = 10, docs_per_group: int = 40, seed: int = 42, partitions: int | None = None):
-    pdf = synthesize_pages_pdf(n_groups, docs_per_group, seed)
-    df = spark.createDataFrame(pdf)
-    if partitions:
-        df = df.repartition(partitions, "url")
-    return df
+def synthesize_pages(spark, n_groups: int = 10, docs_per_group: int = 40, seed: int = 42):
+    return spark.createDataFrame(synthesize_pages_pdf(n_groups, docs_per_group, seed))
 
 
 def pages_from_documents(spark, sf_dir: str, replicate: int = 1):

@@ -362,15 +362,15 @@ def phrase_score(count_ab: int, count_a: int, count_b: int, vocab_size: int, min
     return (count_ab - min_count) * float(vocab_size) / (count_a * count_b)
 
 
-def apply_phrases(tokens: list[str], phrase_pairs: set[tuple[str, str]], delimiter: str = "_") -> list[str]:
-    """Greedy left-to-right non-overlapping merge of scored pairs (the
-    Phraser application semantics)."""
+def apply_phrases(tokens: list[str], phrase_pairs: set[tuple[str, str]]) -> list[str]:
+    """Greedy left-to-right non-overlapping merge of scored pairs into
+    "_"-joined tokens (the Phraser application semantics)."""
     out: list[str] = []
     i = 0
     n = len(tokens)
     while i < n:
         if i + 1 < n and (tokens[i], tokens[i + 1]) in phrase_pairs:
-            out.append(tokens[i] + delimiter + tokens[i + 1])
+            out.append(tokens[i] + "_" + tokens[i + 1])
             i += 2
         else:
             out.append(tokens[i])

@@ -35,7 +35,7 @@ def main() -> None:
     ap.add_argument("--docs-per-group", type=int, default=40, help="for --synthetic")
     ap.add_argument("--work-dir", help="checkpoint/lineage dir (enables resume)")
     ap.add_argument("--out", help="write triples parquet here")
-    ap.add_argument("--scorer", default=None, help="override scorer backend (hash|lexicon|bert|llm)")
+    ap.add_argument("--scorer", default=None, help="override scorer backend (lexicon|bert|llm)")
     ap.add_argument(
         "--table-format", default=None, choices=["parquet", "iceberg"],
         help="checkpoint table format (iceberg needs a catalog; falls back to parquet)",

@@ -1,15 +1,31 @@
-"""Bucketed co-located joins: the written layout must eliminate the join
-shuffle (no Exchange in the executed plan) and preserve join results
-exactly. Uses its own warehouse dir so managed tables don't leak."""
+"""Bucketed co-located joins: a stage that StageStore(bucket_spec=...)
+writes must eliminate the join shuffle (no Exchange in the executed plan)
+and preserve join results exactly. The bucketed tables are external tables
+under a temporary work_dir, dropped from the catalog afterwards."""
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from llm_review_aggregation_spark.plans import bucketing
+from llm_review_aggregation_spark.plans.lineage import StageStore
+
+
+def plan_has_exchange(df) -> bool:
+    """True if the df's executed plan contains a SHUFFLE Exchange
+    (EnsureRequirements inserts `Exchange hashpartitioning(...)` exactly
+    when bucketing did NOT satisfy the join's distribution requirement).
+    A shuffle prints as "Exchange hashpartitioning(...)", "Exchange
+    rangepartitioning(...)", "Exchange RoundRobinPartitioning(...)" or
+    "Exchange SinglePartition". "BroadcastExchange" is not a shuffle, and
+    "ReusedExchange" never runs one itself: it re-reads another exchange,
+    whose own "Exchange ..." line then matches elsewhere in the plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return bool(re.search(r"(?<!Broadcast)(?<!Reused)Exchange\s", plan))
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark):
+def bucketed_tables(spark, tmp_path_factory):
     orders = spark.range(0, 2000).select(
         F.col("id").alias("o_orderkey"),
         (F.col("id") % 97).alias("o_custkey"),
@@ -19,50 +35,50 @@ def bucketed_tables(spark):
         F.col("id").alias("c_custkey"),
         F.concat(F.lit("cust_"), F.col("id")).alias("c_name"),
     )
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS customer_b")
-    bucketing.write_bucketed(orders, "orders_b", "o_custkey", n_buckets=4)
-    bucketing.write_bucketed(
-        customer.withColumnRenamed("c_custkey", "o_custkey"), "customer_b", "o_custkey", n_buckets=4
+    store = StageStore(
+        spark,
+        str(tmp_path_factory.mktemp("bucketed_join")),
+        bucket_spec={"orders": ("o_custkey", 4), "customer": ("o_custkey", 4)},
     )
-    yield orders, customer
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS customer_b")
+    orders_b = store.run_table("orders", lambda: orders)
+    customer_b = store.run_table(
+        "customer", lambda: customer.withColumnRenamed("c_custkey", "o_custkey")
+    )
+    yield orders, customer, orders_b, customer_b
+    for stage in ("orders", "customer"):
+        spark.sql(f"DROP TABLE IF EXISTS {store._bucket_table_name(stage)}")
 
 
 class TestBucketedJoin:
     def test_join_has_no_exchange(self, spark, bucketed_tables):
         with _no_aqe_no_broadcast(spark):
-            a = bucketing.read_table(spark, "orders_b")
-            b = bucketing.read_table(spark, "customer_b")
+            _, _, a, b = bucketed_tables
             joined = a.join(b, "o_custkey")
             joined.collect()
-            assert not bucketing.plan_has_exchange(joined), (
+            assert not plan_has_exchange(joined), (
                 joined._jdf.queryExecution().executedPlan().toString()
             )
 
     def test_unbucketed_join_does_exchange(self, spark, bucketed_tables):
         """Control: the same join on unbucketed inputs must shuffle, so the
         no-Exchange assertion above is meaningful."""
-        orders, customer = bucketed_tables
+        orders, customer, _, _ = bucketed_tables
         with _no_aqe_no_broadcast(spark):
             joined = orders.join(
                 customer.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
             )
             joined.collect()
-            assert bucketing.plan_has_exchange(joined)
+            assert plan_has_exchange(joined)
 
     def test_bucketed_groupby_has_no_exchange(self, spark, bucketed_tables):
         with _no_aqe_no_broadcast(spark):
-            a = bucketing.read_table(spark, "orders_b")
+            a = bucketed_tables[2]
             agg = a.groupBy("o_custkey").agg(F.sum("o_total").alias("s"))
             agg.collect()
-            assert not bucketing.plan_has_exchange(agg)
+            assert not plan_has_exchange(agg)
 
     def test_join_results_exact(self, spark, bucketed_tables):
-        orders, customer = bucketed_tables
-        a = bucketing.read_table(spark, "orders_b")
-        b = bucketing.read_table(spark, "customer_b")
+        orders, customer, a, b = bucketed_tables
         got = sorted(
             (r["o_orderkey"], r["c_name"])
             for r in a.join(b, "o_custkey").select("o_orderkey", "c_name").collect()
@@ -99,7 +115,7 @@ class TestPipelineBucketedTriples:
         with _no_aqe_no_broadcast(spark):
             agg = res.triples.groupBy("subj").agg(F.sum("score").alias("s"))
             agg.collect()
-            assert not bucketing.plan_has_exchange(agg), (
+            assert not plan_has_exchange(agg), (
                 agg._jdf.queryExecution().executedPlan().toString()
             )
 
@@ -110,7 +126,7 @@ class TestPipelineBucketedTriples:
             b = res.triples.select(F.col("subj"), F.col("score").alias("score_b"))
             joined = a.join(b, "subj")
             joined.collect()
-            assert not bucketing.plan_has_exchange(joined), (
+            assert not plan_has_exchange(joined), (
                 joined._jdf.queryExecution().executedPlan().toString()
             )
 
@@ -130,8 +146,6 @@ class TestPipelineBucketedTriples:
         """Resume in a fresh session: the catalog entry is gone but the
         bucket layout lives in the file names — _read_table re-registers the
         external table and the rollup still plans Exchange-free."""
-        from llm_review_aggregation_spark.plans.lineage import StageStore
-
         _, wd, _ = bucketed_run
         store = StageStore(spark, wd, bucket_spec={"triples": ("subj", 4)})
         spark.sql(f"DROP TABLE IF EXISTS {store._bucket_table_name('triples')}")
@@ -139,7 +153,7 @@ class TestPipelineBucketedTriples:
         with _no_aqe_no_broadcast(spark):
             agg = triples.groupBy("subj").agg(F.count(F.lit(1)).alias("n"))
             agg.collect()
-            assert not bucketing.plan_has_exchange(agg)
+            assert not plan_has_exchange(agg)
 
 
 class _no_aqe_no_broadcast:

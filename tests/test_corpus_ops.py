@@ -20,15 +20,6 @@ def embeddings(spark):
 
 
 class TestTextStats:
-    def test_doc_stats_columns(self, documents):
-        out = textstats.doc_stats(documents, "text")
-        row = out.filter(F.col("doc_id") == 0).first()
-        assert row["n_tokens"] > 0
-        assert 0 <= row["punct_ratio"] <= 1
-        assert 0 <= row["stopword_ratio"] <= 1
-        assert 0 <= row["quality_score"] <= 1
-        assert len(row["fingerprint"]) == 32
-
     def test_fingerprint_normalizes_whitespace(self, spark):
         df = spark.createDataFrame([("a  b",), ("A b ",)], "text string")
         fps = [r[0] for r in df.select(textstats.fingerprint(F.col("text"))).collect()]

@@ -1,7 +1,8 @@
 """Spark jobs are paid only for work that needs the cluster: a phrase-
 vocabulary pass is one action, driver-built tables are local relations
-that read back without a job, and a small ephemeral pipeline run stays
-inside a fixed job budget."""
+that read back without a job, a small ephemeral pipeline run stays
+inside a fixed job budget, and a resumed checkpointed run reads its
+stages back with no job but the two the caller's results need."""
 
 from __future__ import annotations
 
@@ -18,6 +19,9 @@ from llm_review_aggregation_spark.session import local_table
 # below, with the test session's 4 cores and 4 shuffle partitions, as
 # measured
 PIPELINE_JOB_BUDGET = 17
+# a resumed run on a complete work_dir: the ontology_edges collect that
+# E7's tree needs and the caller's triples read
+RESUME_JOB_BUDGET = 2
 
 
 def _executed_plan(df) -> str:
@@ -74,3 +78,18 @@ def test_ephemeral_pipeline_job_budget(spark, jobs_submitted):
 
     assert jobs_submitted(run) <= PIPELINE_JOB_BUDGET
     assert any(t["pred"] == "partOf" for t in triples)
+
+
+def test_resumed_pipeline_job_budget(spark, jobs_submitted, tmp_path):
+    pages = synth.synthesize_pages(spark, n_groups=2, docs_per_group=10, seed=16)
+    work_dir = str(tmp_path / "kg")
+    with run_pipeline(spark, pages, work_dir=work_dir) as res:
+        first = sorted(map(tuple, res.triples.collect()))
+    again = []
+
+    def resume():
+        with run_pipeline(spark, pages, work_dir=work_dir) as res:
+            again.extend(map(tuple, res.triples.collect()))
+
+    assert jobs_submitted(resume) <= RESUME_JOB_BUDGET
+    assert sorted(again) == first and first

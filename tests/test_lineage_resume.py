@@ -259,7 +259,6 @@ def test_iceberg_branch_selected_with_catalog_conf(spark, work_dir, monkeypatch)
     store = StageStore.__new__(StageStore)
     store.spark = spark
     store.work_dir = work_dir
-    store.catalog = "spark_catalog"
     store.table_format = "iceberg"
     # identifier shape: catalog.namespace.kind_stage
     ident = store._table_ident("table_docs")
