@@ -189,7 +189,7 @@ def sparse_cosine_pairs(weights: DataFrame, threshold: float, salt_mod: int | No
     )
 
 
-def merge_phrase_tokens(sentences: DataFrame, terms: list[str]):
+def merge_phrase_tokens(terms: list[str]):
     """Column expression: `tokens` with every multi-word term's token
     subsequence merged into one underscore-joined token — the gensim
     phrase-merge step the reference applies before Word2Vec training
@@ -232,7 +232,7 @@ def _fit_word2vec(
     from pyspark.ml.feature import Word2Vec
 
     if corpus is None:
-        corpus = sentences.select(merge_phrase_tokens(sentences, terms).alias("_toks"))
+        corpus = sentences.select(merge_phrase_tokens(terms).alias("_toks"))
     w2v = (
         Word2Vec()
         .setInputCol("_toks")
@@ -302,7 +302,7 @@ def subword_corpus(
     pass is the correct tool here, same as the mining kernels)."""
     import pandas as pd
 
-    toks = sentences.select(merge_phrase_tokens(sentences, terms).alias("_toks"))
+    toks = sentences.select(merge_phrase_tokens(terms).alias("_toks"))
     nmin, nmax = ngram_min, ngram_max
 
     def gen(batches):

@@ -105,12 +105,12 @@ def _make_kernel(root: str, nodes_post: list[str], edges: dict[str, str],
         n_groups = len(groups)
 
         # A8a: per-(url, phrase, node) vote = max-abs sentiment; tie -> min start
-        single = ~scored.duplicated(["g", "phrase_id"], keep=False)
+        single = ~scored.duplicated(["g", "url", "phrase_ord"], keep=False)
         v = scored.assign(single=single, absv=scored["sentiment"].abs())
         v = v[v["absv"] > sentiment_threshold].sort_values(
             ["g", "absv", "start"], ascending=[True, False, True], kind="mergesort"
         )
-        pv = v.drop_duplicates(["g", "url", "phrase_id", "node"]).rename(columns={"sentiment": "vote"})
+        pv = v.drop_duplicates(["g", "url", "phrase_ord", "node"]).rename(columns={"sentiment": "vote"})
 
         # A8b: per-(url, node) review vote = sign of max-abs; tie -> min phrase_ord
         rv = pv.sort_values(
@@ -192,7 +192,7 @@ def _make_kernel(root: str, nodes_post: list[str], edges: dict[str, str],
 
 
 _SCORED_SCHEMA = (
-    "group_id string, url string, phrase_id string, phrase_ord long, "
+    "group_id string, url string, phrase_ord long, "
     "phrase string, node string, start int, sentiment double"
 )
 
@@ -212,10 +212,11 @@ def _fused_phrase_scores(
     would pay a serialize/deserialize round trip per operator. The scorer
     sees one pandas batch of matched (phrase, form, start, end) rows.
     `phrase_ord` (sentence then phrase position) pins within-review
-    tie-breaking downstream (the reference relies on Python list order)."""
+    tie-breaking downstream (the reference relies on Python list order),
+    and with `url` it identifies a phrase."""
     backend = tp.current_backend()
     gloss_tokens = {n: [s.split(" ") for s in syns] for n, syns in glossary.items()}
-    cols = ["group_id", "url", "phrase_id", "phrase_ord", "phrase", "node", "form", "start", "end"]
+    cols = ["group_id", "url", "phrase_ord", "phrase", "node", "form", "start", "end"]
 
     def gen(batches):
         tp.install_backend(backend)
@@ -229,17 +230,12 @@ def _fused_phrase_scores(
                     for node, form, s, e in tp.match_glossary(
                         toks, nodes_post, parents, gloss_tokens
                     ):
-                        rows.append(
-                            (gid, url, f"{url}#{sid}#{pos}", int(sid) * 100000 + pos,
-                             phrase, node, form, s, e)
-                        )
+                        rows.append((gid, url, int(sid) * 100000 + pos, phrase, node, form, s, e))
             mdf = pd.DataFrame(rows, columns=cols)
             mdf["sentiment"] = (
                 scorer.score_sentiments(mdf) if len(mdf) else pd.Series(dtype="float64")
             )
-            yield mdf[
-                ["group_id", "url", "phrase_id", "phrase_ord", "phrase", "node", "start", "sentiment"]
-            ]
+            yield mdf[["group_id", "url", "phrase_ord", "phrase", "node", "start", "sentiment"]]
 
     return sentences.select("url", "group_id", "sent_id", "sentence").mapInPandas(
         gen, _SCORED_SCHEMA

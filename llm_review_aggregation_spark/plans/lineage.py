@@ -185,6 +185,10 @@ class StageStore:
 
     # -- status ---------------------------------------------------------------
     def is_complete(self, stage: str) -> bool:
+        """Whether `stage` resumes without computing: its JSON artifact
+        exists, or its table lineage says complete."""
+        if os.path.exists(self._artifact_path(stage)):
+            return True
         if self.table_format == "iceberg":
             try:
                 rows = self._read_table(stage, kind="lineage").filter(F.col("status") == "complete").count()
@@ -248,14 +252,16 @@ class StageStore:
         parquet a fresh stage costs one Spark job, its write: the lineage
         rows come from the written files' footers, completion is read on
         the driver, and the read-back reuses the schema just written
-        instead of inferring it. `duration_sec` covers compute and write."""
+        instead of inferring it. A local relation (`df.isLocal()`, a table
+        the driver built) is handed back as is, so reading it needs no job.
+        `duration_sec` covers compute and write."""
         if self.is_complete(stage):
             return self._read_table(stage)
         t0 = time.time()
         df = fn()
         self._write_table(df, stage)
         self._write_lineage(stage, duration_sec=time.time() - t0)
-        return self._read_table(stage, schema=df.schema)
+        return df if df.isLocal() else self._read_table(stage, schema=df.schema)
 
     # -- small JSON artifacts (phrase tables, synsets, tree) -------------------
     def run_artifact(self, stage: str, fn):
@@ -377,6 +383,9 @@ class EphemeralStore:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
+
+    def is_complete(self, stage: str) -> bool:
+        return False
 
     def run_table(self, stage: str, fn) -> DataFrame:
         return fn()

@@ -1,7 +1,9 @@
 """End-to-end KG-construction pipeline: pages -> triples.
 
 Stage graph (SURVEY §7.1); every stage checkpoints through plans/lineage.py
-when a work_dir is given, and a re-run resumes from the last complete stage.
+when a work_dir is given. Stages are demand-driven: a re-run computes only
+the stages whose checkpoint is missing, and opens a complete checkpoint only
+when a caller reads it, so a resumed complete run opens just `triples`.
 
     E1 extract      docs(url, group_id, text)
     E2 segment      sentences(url, group_id, sent_id, sentence, tokens)
@@ -16,7 +18,7 @@ when a work_dir is given, and a re-run resumes from the last complete stage.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,19 +32,35 @@ from llm_review_aggregation_spark.plans.lineage import EphemeralStore, StageStor
 from llm_review_aggregation_spark.session import local_table
 
 
-@dataclass
+# empty, typed outputs of the degenerate corpus (no aspect survived)
+_SYNSETS_SCHEMA = "concept string, member string, count long"
+_EDGES_SCHEMA = "subj string, pred string, obj string, score double"
+_SCORES_SCHEMA = "child string, parent string, score_sum double, pair_count long"
+
+
+def _field(name: str) -> property:
+    return property(lambda self: self._stages[name](), doc=f"`{name}`, resolved on first access")
+
+
 class PipelineResult:
-    docs: DataFrame
-    sentences: DataFrame
-    candidates: DataFrame
-    aspects: DataFrame
-    synsets: DataFrame
-    ontology_edges: DataFrame
-    arguments: DataFrame
-    triples: DataFrame
-    root_name: str
-    tree_edges: dict[str, str]
-    synset_map: dict[str, list[str]]
+    """The pipeline's outputs. `triples` is resolved by run_pipeline; every
+    other field resolves its stage on first access, so a resumed run opens
+    only the checkpoints its caller reads."""
+
+    docs = _field("docs")
+    sentences = _field("sentences")
+    candidates = _field("candidates")
+    aspects = _field("aspects")
+    synsets = _field("synsets")
+    ontology_edges = _field("ontology_edges")
+    arguments = _field("arguments")
+    triples = _field("triples")
+    root_name = _field("root_name")
+    tree_edges = _field("tree_edges")
+    synset_map = _field("synset_map")
+
+    def __init__(self, stages: dict):
+        self._stages = stages
 
     def release(self) -> None:
         """Unpersist the pipeline's cached intermediates (`sentences` feeds
@@ -51,11 +69,12 @@ class PipelineResult:
         what `__spark_entry__.queries()` and bench.py do — must call this
         (or use the result as a context manager) once they've materialized
         what they need, or cached blocks accumulate across runs. Idempotent;
-        the result's DataFrames stay valid afterwards, they just recompute
+        a `sentences` that was never resolved stays unresolved, and the
+        result's DataFrames stay valid afterwards, they just recompute
         instead of hitting the cache."""
-        lvl = self.sentences.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            self.sentences.unpersist()
+        stage = self._stages["sentences"]
+        if stage.cache_info().currsize:
+            stage().unpersist()
 
     def __enter__(self) -> "PipelineResult":
         return self
@@ -72,7 +91,15 @@ def run_pipeline(
     work_dir: str | None = None,
     bucket_triples: int | None = None,
 ) -> PipelineResult:
-    """``bucket_triples=N`` writes the triples checkpoint hash-bucketed (and
+    """Each stage is a memoized zero-argument function that computes
+    through the store and calls its upstream stages only inside its compute,
+    which the store skips for a complete stage; so a complete checkpoint
+    never pulls in its inputs. The stage functions are where per-stage
+    staleness fingerprints would go. This call walks the stages in order,
+    resolves each one whose checkpoint is missing (every stage, without a
+    work_dir), then resolves `triples`; a failure raises here.
+
+    ``bucket_triples=N`` writes the triples checkpoint hash-bucketed (and
     sorted) on `subj` into N buckets (requires work_dir, parquet format):
     the graph table's hot consumers — per-subject rollups, subj-keyed
     self-joins, triples x entity-attribute joins — then plan WITHOUT an
@@ -86,43 +113,63 @@ def run_pipeline(
         if work_dir
         else EphemeralStore(spark)
     )
-    entity_scorer, relation_scorer, sentiment_scorer = scoring.make_scorers(cfg.scorer, cfg.scorer_params)
+
+    @cache
+    def scorers():
+        # (entity, relation, sentiment): built inside the first stage that scores
+        return scoring.make_scorers(cfg.scorer, cfg.scorer_params)
 
     # E1/E2 ---------------------------------------------------------------
-    docs = store.run_table("docs", lambda: cleaning.extract_docs(pages))
-    # Ephemeral (no work_dir): E1+E2 run FUSED straight from pages — the
-    # cleaned text crosses the Arrow boundary once instead of chaining two
-    # Python runners (tokenize.segment_pages; byte-identical semantics,
-    # differential-tested). With a work_dir the docs checkpoint already
-    # holds the cleaned text, so segmenting reads it instead of re-cleaning.
-    if work_dir:
-        sentences = store.run_table("sentences", lambda: tokenize.segment_sentences(docs))
-    else:
-        sentences = store.run_table("sentences", lambda: tokenize.segment_pages(pages))
-    sentences.cache()
+    @cache
+    def docs():
+        return store.run_table("docs", lambda: cleaning.extract_docs(pages))
+
+    @cache
+    def sentences():
+        # Ephemeral (no work_dir): E1+E2 run FUSED straight from pages — the
+        # cleaned text crosses the Arrow boundary once instead of chaining two
+        # Python runners (tokenize.segment_pages; byte-identical semantics,
+        # differential-tested). With a work_dir the docs checkpoint already
+        # holds the cleaned text, so segmenting reads it instead of re-cleaning.
+        if work_dir:
+            df = store.run_table("sentences", lambda: tokenize.segment_sentences(docs()))
+        else:
+            df = store.run_table("sentences", lambda: tokenize.segment_pages(pages))
+        return df.cache()
 
     # E3 --------------------------------------------------------------------
-    pairs = store.run_artifact(
-        "phrase_vocab",
-        lambda: sorted(mining.build_phrase_vocab(sentences, cfg.phrase_min_count, cfg.phrase_threshold)),
-    )
-    pair_set = {tuple(p) for p in pairs}
-    candidates = store.run_table(
-        "candidates",
-        lambda: mining.top_candidates(
-            mining.count_noun_terms(sentences, pair_set), cfg.n_candidate_aspects
-        ),
-    )
+    @cache
+    def phrase_vocab():
+        pairs = store.run_artifact(
+            "phrase_vocab",
+            lambda: sorted(
+                mining.build_phrase_vocab(sentences(), cfg.phrase_min_count, cfg.phrase_threshold)
+            ),
+        )
+        return {tuple(p) for p in pairs}
+
+    @cache
+    def candidates():
+        return store.run_table(
+            "candidates",
+            lambda: mining.top_candidates(
+                mining.count_noun_terms(sentences(), phrase_vocab()), cfg.n_candidate_aspects
+            ),
+        )
 
     # E4 --------------------------------------------------------------------
-    aspects_df = store.run_table(
-        "aspects",
-        lambda: aspects_ops.extract_aspects(sentences, candidates, entity_scorer, cfg.entity_prob_threshold),
-    )
+    @cache
+    def aspects():
+        return store.run_table(
+            "aspects",
+            lambda: aspects_ops.extract_aspects(
+                sentences(), candidates(), scorers()[0], cfg.entity_prob_threshold
+            ),
+        )
 
     # E5 --------------------------------------------------------------------
     def _cluster():
-        rows = aspects_df.orderBy(F.desc("count"), F.asc("term")).limit(cfg.top_k_aspects_to_keep).collect()
+        rows = aspects().orderBy(F.desc("count"), F.asc("term")).limit(cfg.top_k_aspects_to_keep).collect()
         counts = {r["term"]: r["count"] for r in rows}
         if not counts:
             return {"root": None, "synset_counts": {}, "synsets": {}}
@@ -136,7 +183,7 @@ def run_pipeline(
 
             synset_counts, synsets = canonicalize.cluster_synsets_scale(
                 spark,
-                sentences,
+                sentences(),
                 counts,
                 root_name,
                 cfg.similarity_threshold,
@@ -154,108 +201,132 @@ def run_pipeline(
             kwargs = dict(cfg.embedding_params)
             kwargs.setdefault("window", cfg.embedding_window)
             sim = builders[cfg.embedding_backend](
-                sentences, list(counts), topn=cfg.rcs_topn, **kwargs
+                sentences(), list(counts), topn=cfg.rcs_topn, **kwargs
             )
             synset_counts, synsets = concepts_ops.cluster_synsets(
                 root_name, counts, sim, cfg.similarity_threshold, cfg.num_clustering_levels
             )
         return {"root": root_name, "synset_counts": synset_counts, "synsets": synsets}
 
-    concept_art = store.run_artifact("concepts", _cluster)
-    root_name = concept_art["root"]
-    if root_name is None:
-        # degenerate corpus (no aspects survived): emit empty, well-typed outputs
-        empty = {
-            "synsets": local_table(spark, [], "concept string, member string, count long"),
-            "edges": local_table(spark, [], "subj string, pred string, obj string, score double"),
-            "arguments": local_table(
-                spark,
-                [],
-                "group_id string, aspect string, polarity boolean, strength double, "
-                "strongest_support_phrase string, strongest_attack_phrase string, "
-                "strongest_support_feature string, strongest_attack_feature string",
-            ),
-        }
-        return PipelineResult(
-            docs=docs,
-            sentences=sentences,
-            candidates=candidates,
-            aspects=aspects_df,
-            synsets=empty["synsets"],
-            ontology_edges=empty["edges"],
-            arguments=empty["arguments"],
-            triples=empty["edges"],
-            root_name="",
-            tree_edges={},
-            synset_map={},
-        )
-    synset_counts = {k: int(v) for k, v in concept_art["synset_counts"].items()}
-    synset_map = {k: list(v) for k, v in concept_art["synsets"].items()}
+    @cache
+    def concepts():
+        return store.run_artifact("concepts", _cluster)
 
-    synsets_rows = [(c, m, synset_counts[c]) for c, ms in synset_map.items() for m in ms]
-    synsets_df = store.run_table(
-        "synsets",
-        lambda: local_table(spark, synsets_rows, "concept string, member string, count long"),
-    )
+    def root():
+        # None on the degenerate corpus, whose later stages are empty,
+        # typed and never checkpointed
+        return concepts()["root"]
+
+    @cache
+    def synset_counts():
+        return {k: int(v) for k, v in concepts()["synset_counts"].items()}
+
+    @cache
+    def synset_map():
+        return {k: list(v) for k, v in concepts()["synsets"].items()}
+
+    def graph_stage(stage, schema, fn):
+        if root() is None:
+            return local_table(spark, [], schema)
+        return store.run_table(stage, fn)
+
+    @cache
+    def synsets():
+        return graph_stage(
+            "synsets",
+            _SYNSETS_SCHEMA,
+            lambda: local_table(
+                spark,
+                [(c, m, synset_counts()[c]) for c, ms in synset_map().items() for m in ms],
+                _SYNSETS_SCHEMA,
+            ),
+        )
 
     # E6 --------------------------------------------------------------------
-    concepts_list = list(synset_counts)
-    meronym_scores = store.run_table(
-        "meronym_scores",
-        lambda: relations_ops.accumulate_meronym_scores(sentences, concepts_list, synset_map, relation_scorer),
-    )
-    ontology_edges = store.run_table(
-        "ontology_edges",
-        lambda: relations_ops.build_ontology_edges(
-            spark, meronym_scores, concepts_list, synset_counts, root_name
-        ),
-    )
-    tree_edges = {r["subj"]: r["obj"] for r in ontology_edges.collect()}
+    @cache
+    def meronym_scores():
+        return graph_stage(
+            "meronym_scores",
+            _SCORES_SCHEMA,
+            lambda: relations_ops.accumulate_meronym_scores(
+                sentences(), list(synset_counts()), synset_map(), scorers()[1]
+            ),
+        )
+
+    @cache
+    def ontology_edges():
+        return graph_stage(
+            "ontology_edges",
+            _EDGES_SCHEMA,
+            lambda: relations_ops.build_ontology_edges(
+                spark, meronym_scores(), list(synset_counts()), synset_counts(), root()
+            ),
+        )
+
+    @cache
+    def tree_edges():
+        return {r["subj"]: r["obj"] for r in ontology_edges().collect()}
 
     # E7 --------------------------------------------------------------------
-    tree_nodes = set(tree_edges) | set(tree_edges.values()) | {root_name}
-    glossary = {n: synset_map.get(n, [n]) for n in tree_nodes}
-    # E7's review counts need one (group_id) row per document, nothing else —
-    # derive it straight from pages (url regex, no clean_text UDF) so the
-    # lazy/ephemeral path never recomputes E1 text extraction for it
-    doc_groups = cleaning.extract_doc_groups(pages)
-    arguments = store.run_table(
-        "arguments",
-        lambda: argumentation.extract_arguments(
+    def _arguments():
+        tree_nodes = set(tree_edges()) | set(tree_edges().values()) | {root()}
+        glossary = {n: synset_map().get(n, [n]) for n in tree_nodes}
+        # E7's review counts need one (group_id) row per document, nothing else —
+        # derive it straight from pages (url regex, no clean_text UDF) so the
+        # lazy/ephemeral path never recomputes E1 text extraction for it
+        doc_groups = cleaning.extract_doc_groups(pages)
+        return argumentation.extract_arguments(
             spark,
-            sentences,
+            sentences(),
             doc_groups,
-            tree_edges,
-            root_name,
+            tree_edges(),
+            root(),
             glossary,
-            sentiment_scorer,
+            scorers()[2],
             cfg.sentiment_threshold,
             cfg.phrase_max_words,
-        ),
-    )
+        )
+
+    @cache
+    def arguments():
+        return graph_stage("arguments", argumentation._OUT_SCHEMA, _arguments)
 
     # materialize graph ------------------------------------------------------
     def _triples():
-        opinion = arguments.select(
+        opinion = arguments().select(
             F.col("group_id").alias("subj"),
             F.lit("hasAspectOpinion").alias("pred"),
             F.col("aspect").alias("obj"),
             F.when(F.col("polarity"), F.col("strength")).otherwise(-F.col("strength")).alias("score"),
         )
-        return ontology_edges.select("subj", "pred", "obj", "score").unionByName(opinion)
+        return ontology_edges().select("subj", "pred", "obj", "score").unionByName(opinion)
 
-    triples = store.run_table("triples", _triples)
+    @cache
+    def triples():
+        return graph_stage("triples", _EDGES_SCHEMA, _triples)
 
+    stages = {
+        "docs": docs,
+        "sentences": sentences,
+        "phrase_vocab": phrase_vocab,
+        "candidates": candidates,
+        "aspects": aspects,
+        "concepts": concepts,
+        "synsets": synsets,
+        "meronym_scores": meronym_scores,
+        "ontology_edges": ontology_edges,
+        "arguments": arguments,
+    }
+    for stage, resolve in stages.items():
+        if not store.is_complete(stage):
+            resolve()
+    triples()
     return PipelineResult(
-        docs=docs,
-        sentences=sentences,
-        candidates=candidates,
-        aspects=aspects_df,
-        synsets=synsets_df,
-        ontology_edges=ontology_edges,
-        arguments=arguments,
-        triples=triples,
-        root_name=root_name,
-        tree_edges=tree_edges,
-        synset_map=synset_map,
+        {
+            **stages,
+            "triples": triples,
+            "root_name": lambda: root() or "",
+            "tree_edges": tree_edges,
+            "synset_map": synset_map,
+        }
     )

@@ -12,7 +12,8 @@ either an existing pages table (--pages-parquet) or a corpus derived from a
 documents table (--from-documents SF_DIR [--replicate R]).
 
 Resumable: re-running with the same --work-dir skips completed stages via
-their lineage rows (plans/lineage.py).
+their lineage rows (plans/lineage.py); the report's `computed` lists the
+stages this run wrote, so every other stage was resumed.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import sys
 import time
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -89,6 +91,7 @@ def main() -> None:
 
         tp.set_tokenizer_backend(args.tokenizer)
 
+    started = time.time()  # the clock lineage checkpoint_ts uses
     t0 = time.monotonic()
     result = run_pipeline(
         spark, pages, cfg, work_dir=args.work_dir, bucket_triples=args.bucket_triples
@@ -117,8 +120,12 @@ def main() -> None:
         # operator reads off a 1000-executor run to find the stage to salt
         from llm_review_aggregation_spark.plans.lineage import StageStore, skew_advice
 
-        metrics = StageStore(spark, args.work_dir, table_format=cfg.table_format).metrics()
+        store = StageStore(spark, args.work_dir, table_format=cfg.table_format)
+        metrics = store.metrics()
         report["stages"] = [row.asDict() for row in metrics.orderBy("stage").collect()]
+        # stages this run wrote; every other stage was resumed from its checkpoint
+        computed = store.lineage().filter(F.col("checkpoint_ts") >= started).select("stage")
+        report["computed"] = sorted(r["stage"] for r in computed.distinct().collect())
         # skew metric -> advice: name the stage to rewrite by hand before the
         # next scale-up (operators/skew.salted_agg is the remediation entry point)
         advice = skew_advice(metrics)

@@ -28,7 +28,7 @@ class TestMergePhraseTokens:
             [(["the", "power", "cell", "died"],), (["power", "cell", "power", "cell"],)],
             "tokens array<string>",
         )
-        out = [r[0] for r in df.select(embeddings.merge_phrase_tokens(df, TERMS)).collect()]
+        out = [r[0] for r in df.select(embeddings.merge_phrase_tokens(TERMS)).collect()]
         assert out[0] == ["the", "power_cell", "died"]
         # adjacent occurrences must BOTH merge (lookahead, not consumed space)
         assert out[1] == ["power_cell", "power_cell"]
@@ -36,13 +36,13 @@ class TestMergePhraseTokens:
     def test_longest_phrase_wins(self, spark):
         df = spark.createDataFrame([(["optical", "zoom", "lens"],)], "tokens array<string>")
         out = [r[0] for r in df.select(
-            embeddings.merge_phrase_tokens(df, ["optical zoom", "optical zoom lens"])
+            embeddings.merge_phrase_tokens(["optical zoom", "optical zoom lens"])
         ).collect()]
         assert out[0] == ["optical_zoom_lens"]
 
     def test_no_phrases_passthrough(self, spark):
         df = spark.createDataFrame([(["a", "b"],)], "tokens array<string>")
-        out = [r[0] for r in df.select(embeddings.merge_phrase_tokens(df, ["a", "b"])).collect()]
+        out = [r[0] for r in df.select(embeddings.merge_phrase_tokens(["a", "b"])).collect()]
         assert out[0] == ["a", "b"]
 
     def test_randomized_vs_python_reference(self, spark):
@@ -72,7 +72,7 @@ class TestMergePhraseTokens:
 
         cases = [[rng.choice(vocab) for _ in range(rng.randrange(0, 12))] for _ in range(60)]
         df = spark.createDataFrame([(c,) for c in cases], "tokens array<string>")
-        got = [r[0] for r in df.select(embeddings.merge_phrase_tokens(df, phrases)).collect()]
+        got = [r[0] for r in df.select(embeddings.merge_phrase_tokens(phrases)).collect()]
         want = [ref_merge(c) for c in cases]
         assert got == want
 

@@ -1,8 +1,8 @@
 """Spark jobs are paid only for work that needs the cluster: a phrase-
 vocabulary pass is one action, driver-built tables are local relations
 that read back without a job, a small ephemeral pipeline run stays
-inside a fixed job budget, and a resumed checkpointed run reads its
-stages back with no job but the two the caller's results need."""
+inside a fixed job budget, and a resumed checkpointed run submits no
+job but the caller's triples read."""
 
 from __future__ import annotations
 
@@ -19,9 +19,9 @@ from llm_review_aggregation_spark.session import local_table
 # below, with the test session's 4 cores and 4 shuffle partitions, as
 # measured
 PIPELINE_JOB_BUDGET = 17
-# a resumed run on a complete work_dir: the ontology_edges collect that
-# E7's tree needs and the caller's triples read
-RESUME_JOB_BUDGET = 2
+# a resumed run on a complete work_dir opens only the triples checkpoint:
+# the caller's triples read
+RESUME_JOB_BUDGET = 1
 
 
 def _executed_plan(df) -> str:
